@@ -247,14 +247,9 @@ object Bench {
         .groupBy("c_mktsegment").agg(count(lit(1))).count()
     }
 
-    // ---- dedup at a >10M-row state: bloom prune vs plain anti-join ------
+    // ---- dedup at a >10M-row state: the anti-join past any broadcast ----
     // State = 12M ids (past any broadcast), incoming = 4M full-width rows,
-    // 25% already known. The bloom timing includes EVERYTHING its path
-    // costs: the state count, the treeAggregate filter build and both
-    // complementary incoming scans. On this box the PLAIN join wins —
-    // local shuffles are memcpy-speed while the filter build is a fixed
-    // ~2 s — which is exactly why the prune is opt-in (see StateStore.dedup
-    // scaladoc and BASELINE.md for the regime where it pays).
+    // 25% already known.
     graft.util.Scratch.withTempDir("bench_state") { stateDir =>
       val stateN = 12000000L
       val inN = 4000000L
@@ -267,14 +262,9 @@ object Bench {
       def knownDf = spark.read.parquet(stateDir)
       def incoming = DataGen.sequences(spark, inN, cpus * 2)
       val st = new StateStore("bench-dedup-state-never-touched")
-      // untimed warm scan of the state parquet first: both variants then
-      // start from the same page-cache state — without it the variant
-      // timed second inherits a cache warmed by the first, a fixed
-      // ordering bias in the very A/B that set the opt-in default
+      // untimed warm scan of the state parquet first, so the timing
+      // measures the join, not a cold page cache
       knownDf.count()
-      queries("dedup_large_state_bloom") = time2 {
-        st.dedup(incoming, knownDf, bloomPruneThreshold = 10000000L).count()
-      }
       queries("dedup_large_state_plain") = time2 {
         st.dedup(incoming, knownDf).count()
       }

@@ -397,53 +397,6 @@ case class PqAdcExpr(left: Expression, right: Expression, ksub: Int)
     copy(left = l, right = r)
 }
 
-/** Broadcast-Bloom membership probe: `bloom.mightContain(id)` as a codegen
-  * scalar — the scan-side pre-prune for the dedup anti-join. Rows testing
-  * false are DEFINITELY not in the state (Bloom filters have no false
-  * negatives) and skip the join entirely; false positives just take the
-  * join path, so results are identical. The serialized filter rides the
-  * expression (task binary / codegen references), like nearest_centroids'
-  * centroid matrix. String ids probe via their UTF-8 bytes — exactly what
-  * BloomFilter.putString hashes, so it matches df.stat.bloomFilter's
-  * builder. */
-case class BloomMightContainExpr(child: Expression, bloomBytes: Array[Byte])
-    extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case StringType | LongType | IntegerType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"bloom_might_contain expects string or integral ids, got ${other.simpleString}")
-  }
-  @transient private lazy val bloom =
-    org.apache.spark.util.sketch.BloomFilter.readFrom(bloomBytes)
-  def mightContainUtf8(s: org.apache.spark.unsafe.types.UTF8String): Boolean =
-    bloom.mightContainBinary(s.getBytes)
-  def mightContainLong(v: Long): Boolean = bloom.mightContainLong(v)
-  override def nullSafeEval(v: Any): Any = child.dataType match {
-    case StringType =>
-      mightContainUtf8(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    case LongType    => mightContainLong(v.asInstanceOf[Long])
-    case IntegerType => mightContainLong(v.asInstanceOf[Int].toLong)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomExpr", this,
-      classOf[BloomMightContainExpr].getName)
-    child.dataType match {
-      case StringType =>
-        defineCodeGen(ctx, ev, c => s"$ref.mightContainUtf8($c)")
-      case IntegerType =>
-        defineCodeGen(ctx, ev, c => s"$ref.mightContainLong((long) $c)")
-      case _ =>
-        defineCodeGen(ctx, ev, c => s"$ref.mightContainLong($c)")
-    }
-  }
-  override protected def withNewChildInternal(c: Expression): BloomMightContainExpr =
-    copy(child = c)
-}
-
 /** Fixed-size word chunks of a text (array<string>), codegen'd — the scan
   * kernel behind DedupOps.spanDedup; pinned ≡ TextOps.wordChunks (the
   * interpreted HOF formulation) in FunctionsSpec. */
@@ -614,11 +567,6 @@ object GraftFunctions {
     c(PqAdcExpr(ColumnGlue.expression(codes), ColumnGlue.expression(lut), ksub))
   def jaccard_counts(a: Column, b: Column): Column =
     c(JaccardCountsExpr(ColumnGlue.expression(a), ColumnGlue.expression(b)))
-  def bloom_might_contain(id: Column, bloom: org.apache.spark.util.sketch.BloomFilter): Column = {
-    val bos = new java.io.ByteArrayOutputStream()
-    bloom.writeTo(bos)
-    c(BloomMightContainExpr(ColumnGlue.expression(id), bos.toByteArray))
-  }
   def dot_product(a: Column, b: Column): Column = c(DotProductExpr(ColumnGlue.expression(a), ColumnGlue.expression(b)))
   def cosine_sim(a: Column, b: Column): Column = c(CosineSimExpr(ColumnGlue.expression(a), ColumnGlue.expression(b)))
 }

@@ -164,9 +164,8 @@ object SimilarityOps {
    * at growing n is a disguised near-cartesian: a naive caller at 10^9
    * vectors with bits=8 would get ~4M-row buckets and a 10^13-pair join.
    * Autoscale costs one count() of the corpus PER CALL — a probe service
-   * invoking this per query batch should pass `knownCorpusSize` (the
-   * `knownSizeHint` pattern from StateStore.dedup: measure once, reuse) or
-   * explicit bits; SimilarityOpsSpec asserts the hint path runs zero
+   * invoking this per query batch should pass `knownCorpusSize` (measure
+   * once, reuse) or explicit bits; SimilarityOpsSpec asserts the hint path runs zero
    * pre-action jobs.
    */
   def lshTopK(corpus: DataFrame, idCol: String, vecCol: String,

@@ -71,12 +71,14 @@ object GraftSession {
       // page-level corruption detection on sink files — re-enable where
       // long-lived storage integrity outweighs write throughput.
       .config("spark.hadoop.parquet.page.write-checksum.enabled", "false")
-      // Columnar-cache compression OFF (PerfLab cacheab, 6 interleaved
-      // rounds across two contention epochs: raw won 4/6, best 6.21 s vs
-      // 7.39 s full pipeline): the routed cache's dominant column is the
-      // near-random token array, where the columnar encoders spend their
-      // time to save almost nothing. Trade-off: a larger in-memory cache —
-      // flip back on when cache memory (not build CPU) is the constraint.
+      // Columnar-cache compression OFF (6 interleaved full-pipeline rounds
+      // over a columnar routed cache across two contention epochs: raw won
+      // 4/6, best 6.21 s vs 7.39 s): the dominant column of the routed
+      // records is the near-random token array, where the columnar
+      // encoders spend their time to save almost nothing. It applies to
+      // every columnar persist (e.g. the streaming micro-batch's routed
+      // set). Trade-off: a larger in-memory cache — flip back on when
+      // cache memory (not build CPU) is the constraint.
       .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
       // oracle parity + deterministic goldens
       .config("spark.sql.session.timeZone", "UTC")

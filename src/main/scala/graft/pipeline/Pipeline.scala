@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Per-run metric counters — mirrors RunStatistics
   * (reference: src/data_structures.rs:144-150, printed at
@@ -17,7 +16,7 @@ case class RunStats(rowsIn: Long, rowsDeduped: Long, rowsDroppedByFilter: Long,
  *     → parse audit fields (F10) → rules filter (P1) → route + OriginFeed
  *     → fan out to six sink shapes → commit state + metrics.
  *
- * Spark-first shape: one declarative plan per sink over a single persisted
+ * Spark-first shape: one declarative plan per sink over a single materialized
  * routed DataFrame; the reference's channels/threads dissolve into the DAG
  * (SURVEY.md §3.2). Filters run BEFORE the fan-out so each sink writes the
  * minimal set; the anti-join runs BEFORE parse (cheapest-first, the
@@ -39,14 +38,6 @@ object Pipeline {
     duplicate: Int = 1,
     nowEpochSec: Long = Parse.BaseEpoch + Parse.SpanSeconds,
     expirationEpochSec: Long = Parse.BaseEpoch + 30L * 24 * 3600,
-    // persist the routed set once and serve all sinks from cache (the
-    // reference clones the batch per interface). With the round-2 audit
-    // kernels the full recompute is ~1.6s/10^6 rows while materializing
-    // the columnar cache costs ~5s — for scan-cheap derivation pipelines
-    // set false and let each concurrent sink job recompute scan-side
-    // (at 100 TB this trades executor memory/spill against N re-scans;
-    // keep true when the source scan dominates).
-    persistRouted: Boolean = true,
     // Target rows per output file for the record sinks. 64 input
     // partitions × 8 concurrent sinks × partitionBy values = hundreds of
     // tiny parquet files per run — the classic small-files problem, paid
@@ -65,25 +56,7 @@ object Pipeline {
     // says — e.g. CatalogStateBackend("cat.db.known_content") for an
     // Iceberg/Delta (or plain session-catalog) table. The dedup anti-join,
     // commit ordering and run stats are identical across backends.
-    stateBackend: Option[StateBackend] = None,
-    // Opt-in scan-side Bloom pre-prune of the dedup anti-join once the
-    // state exceeds this many rows (-1 = off, the measured default — see
-    // StateStore.dedup: the filter build only pays for itself when the
-    // avoided incoming exchange is network-bound).
-    bloomPruneThreshold: Long = -1L,
-    // Materialize the shared routed set as a localCheckpoint (raw
-    // UnsafeRow blocks — skips the columnar-cache transpose/encode) instead
-    // of a columnar persist. Default ON: PerfLab ckptab, 6 interleaved
-    // rounds across two contention epochs, checkpoint won 5/6 (best 5.76 s
-    // vs 6.48 s full pipeline) — the columnar transpose of the token
-    // arrays buys nothing for a cache read back row-wise by 8 sink jobs.
-    // Trade-offs, both documented for cluster use: blocks are freed by the
-    // ContextCleaner when the run's DataFrames go unreachable (no explicit
-    // unpersist), and a localCheckpoint truncates lineage — a lost
-    // executor fails the job instead of recomputing (the run is idempotent
-    // by the overwrite contract, so a re-run is safe); set false where
-    // executor churn is routine.
-    cacheViaCheckpoint: Boolean = true)
+    stateBackend: Option[StateBackend] = None)
 
   case class Result(stats: RunStats, snapshot: Option[Int])
 
@@ -92,41 +65,35 @@ object Pipeline {
     * reference's per-type subscriptions (src/config.rs:149-182): rows of
     * disabled types never enter the pipeline. */
   def routedRecords(sequences: DataFrame, rules: Seq[RoutingRule],
-                    enabledTypes: Seq[String] = Schemas.ContentTypes): DataFrame = {
-    val parsed = Parse.deriveFields(sequences)
+                    enabledTypes: Seq[String] = Schemas.ContentTypes): DataFrame =
+    Route.routed(subscribedAndFiltered(Parse.deriveFields(sequences), rules, enabledTypes))
+
+  /** Subscribe → rules filter over parsed records: the one definition
+    * `routedRecords` and `run` share (`run` stamps `__pid` on `parsed`
+    * first). */
+  private def subscribedAndFiltered(parsed: DataFrame, rules: Seq[RoutingRule],
+                                    enabledTypes: Seq[String]): DataFrame = {
     val subscribed =
       if (enabledTypes == Schemas.ContentTypes) parsed
       else parsed.filter(col("content_type").isin(enabledTypes: _*))
-    val filtered = FilterStage.applyStatic(subscribed, rules)
-    Route.routed(filtered)
+    FilterStage.applyStatic(subscribed, rules)
   }
 
   /**
-   * Full run: read → dedup → parse → filter → route → write sinks →
-   * commit state. Returns per-stage counts (the reference's found/saved
-   * statistics) computed as cheap aggregations over the persisted filtered
-   * set plus parquet-footer counts — no extra full pass over the input.
+   * Dedup → `duplicate` inflation, shared by `run` and the streaming
+   * micro-batch. Returns `(fresh, inflated)`: `fresh` holds each new id
+   * once and is what the state commits; `inflated` is what the transform
+   * processes.
    */
-  def run(spark: SparkSession, sequences: DataFrame, outDir: String,
-          cfg: Config = Config()): Result = {
-
-    val backend = cfg.stateBackend.getOrElse(
-      new SnapshotStateBackend(new StateStore(s"$outDir/state")))
-
+  private[graft] def freshAndInflated(spark: SparkSession, in: DataFrame,
+                                      backend: StateBackend,
+                                      cfg: Config): (DataFrame, DataFrame) = {
     val fresh =
       if (cfg.skipKnownLogs)
-        // sizeHint is metadata-cheap and memoized (SnapshotStateBackend →
-        // liveRowCount per snapshot), so the bloom-threshold decision costs
-        // no per-run count job and the commit-path re-evaluation of `fresh`
-        // can never re-fire one
-        StateStore.dedup(sequences, backend.load(spark, cfg.nowEpochSec),
-          withinBatch = cfg.dedupWithinRun,
-          bloomPruneThreshold = cfg.bloomPruneThreshold,
-          knownSizeHint =
-            if (cfg.bloomPruneThreshold >= 0) backend.sizeHint(spark) else -1L)
-      else if (cfg.dedupWithinRun) sequences.dropDuplicates("doc_id")
-      else sequences
-
+        StateStore.dedup(in, backend.load(spark, cfg.nowEpochSec),
+          withinBatch = cfg.dedupWithinRun)
+      else if (cfg.dedupWithinRun) in.dropDuplicates("doc_id")
+      else in
     // Row multiplier for load testing (reference `duplicate`,
     // src/api_connection.rs:356-368) — applied AFTER dedup, like the
     // reference (known check precedes the duplicate enqueue), and only to
@@ -136,6 +103,23 @@ object Pipeline {
         fresh.withColumn("__dup", explode(array_repeat(lit(1), cfg.duplicate)))
           .drop("__dup")
       else fresh
+    (fresh, inflated)
+  }
+
+  /**
+   * Full run: read → dedup → parse → filter → route → write sinks →
+   * commit state. Returns per-stage counts (the reference's found/saved
+   * statistics) computed as cheap aggregations over the materialized
+   * filtered set plus parquet-footer counts — no extra full pass over the
+   * input.
+   */
+  def run(spark: SparkSession, sequences: DataFrame, outDir: String,
+          cfg: Config = Config()): Result = {
+
+    val backend = cfg.stateBackend.getOrElse(
+      new SnapshotStateBackend(new StateStore(s"$outDir/state")))
+
+    val (fresh, inflated) = freshAndInflated(spark, sequences, backend, cfg)
 
     // Stamp the emitting task's partition id BEFORE the filter so the
     // parsed/filtered/dropped per-partition metrics share one lineage
@@ -143,17 +127,19 @@ object Pipeline {
     // exactly the task that parsed the row).
     val parsed = Parse.deriveFields(inflated)
       .withColumn("__pid", spark_partition_id())
-    val subscribed =
-      if (cfg.enabledTypes == Schemas.ContentTypes) parsed
-      else parsed.filter(col("content_type").isin(cfg.enabledTypes: _*))
-    val filtered = FilterStage.applyStatic(subscribed, cfg.rules)
+    val filtered = subscribedAndFiltered(parsed, cfg.rules, cfg.enabledTypes)
 
     // One materialization feeds all sinks + quarantine (the reference clones
-    // the batch per interface, src/collector.rs:215-226; we persist once).
-    val filteredCached =
-      if (!cfg.persistRouted) filtered
-      else if (cfg.cacheViaCheckpoint) filtered.localCheckpoint(eager = false)
-      else filtered.persist(StorageLevel.MEMORY_AND_DISK)
+    // the batch per interface, src/collector.rs:215-226; we materialize
+    // once). A localCheckpoint stores raw UnsafeRow blocks: the sink jobs
+    // read the set back row-wise, so a columnar persist's transpose and
+    // encode of the token arrays buys nothing — in interleaved A/Bs it
+    // lost every pair by about 10% of run time, and recomputing per sink
+    // instead of materializing cost 15.8 s against 6.6 s (BASELINE.md).
+    // Trade-off: a localCheckpoint truncates lineage, so a lost executor
+    // fails the job instead of recomputing; the run is idempotent by the
+    // overwrite contract, so a re-run is safe.
+    val filteredCached = filtered.localCheckpoint(eager = false)
     val quarantineP = Route.quarantined(filteredCached)
     val routedP = Route.routed(filteredCached)
     val quarantine = quarantineP.drop("__pid")
@@ -161,7 +147,7 @@ object Pipeline {
     try {
       // Materialize the shared cache once (otherwise the first concurrent
       // sink job would build it while the others wait on cache locks).
-      val routedCount = if (cfg.persistRouted) cached.count() else -1L
+      val routedCount = cached.count()
       // Output-file sizing for the record sinks (see targetRowsPerFile):
       // never expands parallelism, only merges under-filled partitions —
       // and the MERGE is floored at the session default parallelism
@@ -175,33 +161,22 @@ object Pipeline {
       // parallelism (coalesce cannot expand; forcing a repartition here
       // would add an unmeasured full-payload exchange).
       val writeParallelism = spark.sparkContext.defaultParallelism
-      def partsFor(n: Long): Int =
-        if (n >= 0 && cfg.targetRowsPerFile > 0)
-          math.max(1L, (n + cfg.targetRowsPerFile - 1) / cfg.targetRowsPerFile).toInt
-        else 0
-      def sizedBy(df: DataFrame, n: Long): DataFrame = {
-        val p = partsFor(n)
-        // the floor itself is row-bounded (≥1k rows per write task) so a
-        // near-empty set (quarantine) still collapses to one file
-        val floor = math.min(writeParallelism.toLong,
-          math.max(1L, (n + 999) / 1000)).toInt
-        if (p > 0) df.coalesce(math.max(p, floor)) else df
-      }
+      def sizedBy(df: DataFrame, n: Long): DataFrame =
+        if (cfg.targetRowsPerFile <= 0) df
+        else {
+          val p = math.max(1L, (n + cfg.targetRowsPerFile - 1) / cfg.targetRowsPerFile).toInt
+          // the floor itself is row-bounded (≥1k rows per write task) so a
+          // near-empty set (quarantine) still collapses to one file
+          val floor = math.min(writeParallelism.toLong,
+            math.max(1L, (n + 999) / 1000)).toInt
+          df.coalesce(math.max(p, floor))
+        }
       def sized(df: DataFrame) = sizedBy(df, routedCount)
       // quarantine sized from ITS OWN count (usually ≈0; sizing it from the
       // routed count writes near-empty files when rules are lax and
       // oversized ones when they are strict) — a cache-served count
-      val quarantineSized =
-        if (cfg.persistRouted) sizedBy(quarantine, quarantine.count())
-        else quarantine
+      val quarantineSized = sizedBy(quarantine, quarantine.count())
 
-      // Fan out the sink writes as CONCURRENT jobs — the reference's
-      // interfaces all consume the same batch in parallel
-      // (src/collector.rs:215-226); Spark's scheduler interleaves the jobs
-      // over the shared cache, overlapping I/O and compute.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
       val salted = Route.saltedForWrite(cached, cfg.saltBuckets)
       // Per-partition lineage metrics (north rule): rows parsed / routed /
       // quarantined per emitting task, plus dropped-by-filter derived per
@@ -244,12 +219,11 @@ object Pipeline {
       }
       // operational outputs: the aggregates are a handful of rows — one
       // file each, not one per shuffle partition
-      val writes = recordSinks ++ Seq(
+      Sinks.fanOut(recordSinks ++ Seq(
         () => Sinks.write(Sinks.prtgShape(cached).coalesce(1), s"$outDir/prtg"),
         () => Sinks.write(Sinks.routedChecksum(cached).coalesce(1), s"$outDir/checksums"),
         () => Sinks.write(quarantineSized, s"$outDir/quarantine"),
-        () => Sinks.write(partMetrics.coalesce(1), s"$outDir/metrics"))
-      Await.result(Future.sequence(writes.map(w => Future(w()))), Duration.Inf)
+        () => Sinks.write(partMetrics.coalesce(1), s"$outDir/metrics")))
 
       // State commit strictly AFTER all sink writes (resume contract).
       // The reference marks every RECEIVED blob known, including rows the
@@ -262,7 +236,7 @@ object Pipeline {
 
       // Stats: all counts are either storage metadata counts (input,
       // committed snapshot — backend.commit returns the footer count) or
-      // served from the persisted filtered set — no extra full passes
+      // served from the materialized filtered set — no extra full passes
       // (reference's RunStatistics, A1/A4).
       val rowsIn = sequences.count()
       val rowsFiltered = filteredCached.count()
@@ -276,14 +250,12 @@ object Pipeline {
         rowsQuarantined = rowsFiltered - rowsRouted,
         rowsRouted = rowsRouted)
       Result(stats, backend.currentVersion)
-    } finally if (cfg.persistRouted) {
-      if (cfg.cacheViaCheckpoint)
-        // deterministic release (the ContextCleaner would otherwise wait
-        // for GC): safe because every output is durably written and every
-        // stat collected before this point — nothing re-reads the blocks
-        org.apache.spark.sql.graftglue.RddGlue.checkpointRdd(filteredCached)
-          .foreach(_.unpersist(blocking = false))
-      else { filteredCached.unpersist(); () }
+    } finally {
+      // deterministic release (the ContextCleaner would otherwise wait for
+      // GC): safe because fanOut has settled every sink job and every stat
+      // is collected before this point — nothing re-reads the blocks
+      org.apache.spark.sql.graftglue.RddGlue.checkpointRdd(filteredCached)
+        .foreach(_.unpersist(blocking = false))
     }
   }
 }

@@ -101,4 +101,27 @@ object Sinks {
     val w = df.write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)
   }
+
+  /**
+   * Runs the sink writes as CONCURRENT jobs — the reference's interfaces
+   * all consume the same batch in parallel (src/collector.rs:215-226);
+   * Spark's scheduler interleaves the jobs over the shared cache,
+   * overlapping I/O and compute. Returns only once EVERY write has
+   * finished, so no sink job is still reading the caller's cached blocks
+   * when it releases them. If any write failed, the first failure (in
+   * completion order) is rethrown as the original exception, with later
+   * failures attached as suppressed.
+   */
+  def fanOut(writes: Seq[() => Unit]): Unit = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val settled = writes.map(w => Future(try w() catch { case e: Throwable => failures.add(e); () }))
+    Await.result(Future.sequence(settled), Duration.Inf)
+    Option(failures.poll()).foreach { first =>
+      failures.forEach(first.addSuppressed(_))
+      throw first
+    }
+  }
 }

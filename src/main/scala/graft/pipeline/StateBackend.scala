@@ -44,8 +44,8 @@ trait StateBackend {
   def commit(spark: SparkSession, ids: DataFrame, idCol: String,
              expirationEpochSec: Long, commitEpochSec: Long): Long
 
-  /** Cheap upper-bound state row count for the bloom-threshold decision in
-    * [[StateStore.dedup]]; -1 = unknown (forces a count there). */
+  /** Cheap upper-bound state row count, memoized per committed version so
+    * repeated reads between commits run no job; -1 = unknown. */
   def sizeHint(spark: SparkSession): Long = -1L
 
   /** Committed version, when the backend tracks one. */
@@ -91,9 +91,8 @@ final class CatalogStateBackend(
   // the losing append. -2 = not yet read, -1 = empty table.
   @volatile private var lastVersion: Int = -2
   // Live row count, memoized per committed version (the snapshot store's
-  // liveRowCount pattern): without this, a streaming loop with
-  // bloomPruneThreshold >= 0 fires an O(state) count job per micro-batch
-  // for a number that only changes on commit.
+  // liveRowCount pattern): without this, every sizeHint read fires an
+  // O(state) count job for a number that only changes on commit.
   @volatile private var cachedCount: Long = -1L
   @volatile private var cachedCountVersion: Int = Int.MinValue
 
@@ -158,7 +157,7 @@ final class CatalogStateBackend(
 
   /** Raw table row count — metadata-cheap for parquet/Iceberg tables, and
     * memoized per committed version so repeated calls between commits
-    * (e.g. the bloom-threshold read every micro-batch) cost zero jobs. */
+    * cost zero jobs. */
   override def sizeHint(spark: SparkSession): Long = {
     val v = version(spark)
     if (cachedCountVersion != v || cachedCount < 0L) {

@@ -131,22 +131,17 @@ class StateStore(val dir: String) {
    * shuffled hash/sort-merge anti-join on the id — no code change.
    */
   def dedup(incoming: DataFrame, known: DataFrame, idCol: String = "doc_id",
-            withinBatch: Boolean = false,
-            bloomPruneThreshold: Long = -1L,
-            bloomFpp: Double = 0.01,
-            knownSizeHint: Long = -1L): DataFrame =
-    StateStore.dedup(incoming, known, idCol, withinBatch, bloomPruneThreshold,
-      bloomFpp, knownSizeHint)
+            withinBatch: Boolean = false): DataFrame =
+    StateStore.dedup(incoming, known, idCol, withinBatch)
 
   // raw live row count, memoized per committed snapshot — see liveRowCount
   @volatile private var sizeCache: (Int, Long) = (-2, -1L)
 
   /**
    * Raw live state row count (no expiry filter — an upper bound on any
-   * loaded view, which is the right direction for a bloom-threshold
-   * decision). Memoized per committed snapshot and updated INCREMENTALLY:
-   * after a commit only the new delta directories are counted (parquet
-   * footer metadata), so repeated dedup calls across streaming
+   * loaded view). Memoized per committed snapshot and updated
+   * INCREMENTALLY: after a commit only the new delta directories are
+   * counted (parquet footer metadata), so repeated reads across streaming
    * micro-batches never re-count the whole state (ADVICE r3).
    */
   def liveRowCount(spark: SparkSession): Long = {
@@ -226,10 +221,10 @@ class StateStore(val dir: String) {
   }
 }
 
-/** Backend-agnostic dedup: the anti-join + bloom pre-prune work against ANY
-  * known-content DataFrame (snapshot store, catalog table, in-memory test
-  * fixture), so the logic lives here and both the [[StateStore]] instance
-  * method and [[StateBackend]]-driven pipelines delegate to it. */
+/** Backend-agnostic dedup: the anti-join works against ANY known-content
+  * DataFrame (snapshot store, catalog table, in-memory test fixture), so
+  * the logic lives here and both the [[StateStore]] instance method and
+  * [[StateBackend]]-driven pipelines delegate to it. */
 object StateStore {
 
   /**
@@ -240,10 +235,7 @@ object StateStore {
    * shuffled hash/sort-merge anti-join on the id — no code change.
    */
   def dedup(incoming: DataFrame, known: DataFrame, idCol: String = "doc_id",
-            withinBatch: Boolean = false,
-            bloomPruneThreshold: Long = -1L,
-            bloomFpp: Double = 0.01,
-            knownSizeHint: Long = -1L): DataFrame = {
+            withinBatch: Boolean = false): DataFrame = {
     // withinBatch=true also collapses duplicate ids WITHIN the incoming
     // batch — the reference's sequential contains_key+insert drops repeats
     // inside a run too (src/collector.rs:161). Off by default: it costs an
@@ -251,117 +243,6 @@ object StateStore {
     // file batches) carry unique ids. Turn it on for sources that can
     // repeat ids within one batch.
     val in = if (withinBatch) incoming.dropDuplicates(idCol) else incoming
-    val knownIds0 = known.select(col("content_id").as(idCol)).distinct()
-    // BLOOM PRE-PRUNE (opt-in) for large states: once the state outgrows a
-    // broadcast, the anti-join becomes a sort-merge that shuffles the
-    // ENTIRE corpus — yet at steady state most rows are fresh and never
-    // match. A broadcast Bloom filter over the state ids lets definitely-
-    // fresh rows (no false negatives by construction) skip the join
-    // scan-side; only the maybe-known sliver (known fraction + fpp)
-    // shuffles. False positives just take the join path, so results are
-    // identical to the plain anti-join (StateStoreSpec pins equality).
-    //
-    // OFF by default (threshold -1) because it is a measured trade, not a
-    // free win: the build costs one state scan + ~k hash inserts per id +
-    // a filter-sized merge (12M-id state → 14 MB filter, ~2.0 s at
-    // local[32] — 17% faster than Spark's own df.stat.bloomFilter), and on
-    // a single box whose shuffles are memcpy-speed that build never pays
-    // for itself (measured: plain 2.3-2.5 s vs bloom 5.1-7.2 s at 4M-16M
-    // incoming × 12M state; BASELINE.md round-4 table). Enable it where an
-    // exchange is genuinely expensive — network-bound clusters shuffling
-    // hundreds of GB of incoming against a 10M..1B-id state — by setting
-    // bloomPruneThreshold to the state size above which pruning wins there.
-    // The threshold decision needs the state size: callers that already
-    // know it (Pipeline / streaming pass liveRowCount, memoized per
-    // snapshot) supply knownSizeHint so no per-call count job fires.
-    val stateSize =
-      if (bloomPruneThreshold < 0) -1L
-      else if (knownSizeHint >= 0) knownSizeHint
-      else known.count()
-    // Builder and probe must hash in ONE shared domain, decided from BOTH
-    // sides' id types: long domain only when both sides are integral,
-    // string domain only when both sides are strings. For MIXED types
-    // (e.g. the store's string content_id probed by long incoming ids —
-    // join-time coercion handles that in the plain path) there is no
-    // domain in which the bloom provably mirrors the join's equality
-    // semantics, so the prune is skipped rather than risking a false
-    // negative that silently passes a duplicate.
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-    val bloomDomain: Option[org.apache.spark.sql.types.DataType] =
-      (in.schema(idCol).dataType, knownIds0.schema(idCol).dataType) match {
-        case (StringType, StringType) => Some(StringType)
-        case (LongType | IntegerType, LongType | IntegerType) => Some(LongType)
-        case _ => None
-      }
-    if (bloomPruneThreshold >= 0 && stateSize > bloomPruneThreshold &&
-        bloomDomain.isDefined) {
-      // The Bloom is built from the RAW state ids — duplicate inserts are
-      // harmless to a Bloom filter, so the build is a pure narrow scan +
-      // treeAggregate: no distinct shuffle, no checkpoint materialization.
-      // (A first cut distinct'd + localCheckpoint'd the ids for the build
-      // and it dominated the whole path: ~8 s of the 9.9 s measured at a
-      // 12M-row state.) The join below keeps the lazy distinct projection,
-      // which it evaluates exactly once.
-      val longDomain = bloomDomain.contains(LongType)
-      val bloom = buildBloom(known.select(col("content_id").as(idCol)),
-        idCol, stateSize, bloomFpp, longDomain)
-      // Probe in the SAME domain the builder inserted: putLong /
-      // mightContainLong when both sides are integral (int probes widen to
-      // long in the expression), UTF-8 string bytes when both are strings.
-      val might = graft.functions.GraftFunctions.bloom_might_contain(col(idCol), bloom)
-      // NULL ids never match an anti-join key, so the plain path KEEPS
-      // them; the bloom probe evaluates to NULL for a null id and both
-      // filter(might) and filter(!might) would silently drop the row —
-      // null ids are routed down the definitely-fresh branch explicitly.
-      in.filter(might).join(knownIds0, Seq(idCol), "left_anti")
-        .unionByName(in.filter(col(idCol).isNull || !might))
-    } else {
-      in.join(knownIds0, Seq(idCol), "left_anti")
-    }
-  }
-
-  /** Distributed Bloom build over the state ids: per-partition filters
-    * merged via treeAggregate. `longDomain` selects the hash domain the
-    * PROBE will use (decided in dedup from both sides' types): putLong for
-    * the integral domain, UTF-8 bytes for the string domain — matching
-    * BloomMightContainExpr.mightContainLong / mightContainUtf8 exactly, so
-    * builder and probe can never drift. Null state ids are skipped: a null
-    * key never matches an anti-join probe anyway, and null incoming ids
-    * bypass the bloom entirely (see dedup). */
-  private def buildBloom(ids: DataFrame, idCol: String, expected: Long,
-                         fpp: Double, longDomain: Boolean)
-      : org.apache.spark.util.sketch.BloomFilter = {
-    import org.apache.spark.util.sketch.BloomFilter
-    val spark = ids.sparkSession
-    import spark.implicits._
-    // Cap build parallelism: every partition allocates (and later
-    // serializes + merges) a full expected-size filter — at a 12M-row
-    // state that is 14 MB PER PARTITION, and 32 partitions put ~450 MB
-    // through the merge for a scan whose insert work is trivial. ~2M
-    // inserts per task (see below) keeps the hashing parallel while the
-    // merge traffic stays at a handful of filters. (The pre-prune regime
-    // is mid-size states — 10M..1B ids, filter 14 MB..1.4 GB; beyond that
-    // the filter itself is the bottleneck and partitioned join pruning,
-    // not a single Bloom, is the right tool.)
-    val parts = math.max(4, math.min(ids.queryExecution.toRdd.getNumPartitions,
-      (expected / 2000000L).toInt + 1))
-    val nonNull = ids.filter(col(idCol).isNotNull).coalesce(parts)
-    val zero = BloomFilter.create(math.max(1L, expected), fpp)
-    // insert from the INTERNAL rows (toRdd): the Dataset[String] path
-    // decoded every id into a java.lang.String first — pure allocation, the
-    // filter hashes raw UTF-8 bytes anyway (same bytes either way, so the
-    // probe domain is unchanged). ~2M inserts per task: enough tasks to
-    // parallelize the hashing, few enough that the per-partition
-    // expected-size filters stay a handful through the merge.
-    if (longDomain)
-      nonNull.select(col(idCol).cast("long")).queryExecution.toRdd
-        .treeAggregate(zero)(
-          (f, r) => { f.putLong(r.getLong(0)); f },
-          (a, b) => { a.mergeInPlace(b); a })
-    else
-      nonNull.select(col(idCol).cast("string")).queryExecution.toRdd
-        .treeAggregate(zero)(
-          (f, r) => { f.putBinary(r.getUTF8String(0).getBytes); f },
-          (a, b) => { a.mergeInPlace(b); a })
+    in.join(known.select(col("content_id").as(idCol)).distinct(), Seq(idCol), "left_anti")
   }
 }

@@ -72,29 +72,10 @@ object StreamingPipeline {
         val marker = markerDir.resolve(s"batch-$batchId")
         val batchDir = java.nio.file.Paths.get(s"$outDir/routed/batch_id=$batchId")
         if (!java.nio.file.Files.exists(marker)) {
-          val fresh =
-            if (cfg.skipKnownLogs)
-              // when the (opt-in) bloom prune is on, its threshold decision
-              // reads the backend's sizeHint — memoized per committed
-              // version in BOTH backends (SnapshotStateBackend via
-              // liveRowCount, CatalogStateBackend via cachedCount), so no
-              // full state count per micro-batch
-              StateStore.dedup(batch, backend.load(spark, cfg.nowEpochSec),
-                withinBatch = cfg.dedupWithinRun,
-                bloomPruneThreshold = cfg.bloomPruneThreshold,
-                knownSizeHint =
-                  if (cfg.bloomPruneThreshold >= 0) backend.sizeHint(spark)
-                  else -1L)
-            else if (cfg.dedupWithinRun) batch.dropDuplicates("doc_id")
-            else batch
+          val (fresh, inflated) = Pipeline.freshAndInflated(spark, batch, backend, cfg)
           val replayAfterStateCommit =
             java.nio.file.Files.exists(batchDir) && fresh.isEmpty
           if (!replayAfterStateCommit) {
-            val inflated =
-              if (cfg.duplicate > 1)
-                fresh.withColumn("__dup", explode(array_repeat(lit(1), cfg.duplicate)))
-                  .drop("__dup")
-              else fresh
             val routed = Pipeline.routedRecords(inflated, cfg.rules, cfg.enabledTypes)
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             try {

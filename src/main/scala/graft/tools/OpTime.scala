@@ -8,27 +8,6 @@ import graft.ops._
   * full Bench sweep. */
 object OpTime {
 
-  /** Parquet-backed 12M-id state shared by the bigdedup/bloombuild modes
-    * (the real state shape — a generated lineage would re-derive 12M
-    * formatted strings per evaluation). Written once per JVM into a temp
-    * dir deleted at exit (Scratch hygiene — no cross-round /tmp litter). */
-  private lazy val bigdedupStateDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("optime_state").toString
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      graft.util.Scratch.deleteRecursively(dir)))
-    dir
-  }
-  @volatile private var stateWritten = false
-  private def bigdedupState(spark: org.apache.spark.sql.SparkSession): String = {
-    if (!stateWritten) {
-      spark.range(3000000L, 15000000L)
-        .select(format_string("doc-%012d", col("id")).as("content_id"))
-        .write.mode("overwrite").parquet(bigdedupStateDir)
-      stateWritten = true
-    }
-    bigdedupStateDir
-  }
-
   def main(args: Array[String]): Unit = {
     val op = args.headOption.getOrElse("ngram")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
@@ -89,27 +68,6 @@ object OpTime {
             graft.pipeline.DataGen.sequences(spark, 1000000L, 64), outDir,
             graft.pipeline.Pipeline.Config(targetRowsPerFile = 0L)).stats.rowsRouted
         }
-      case "bigdedup_bloom" | "bigdedup_plain" |
-           "bigdedup_bloom16" | "bigdedup_plain16" => // Bench's large-state A/B
-        val st = new graft.pipeline.StateStore("optime-dedup-state-never-touched")
-        def knownDf = spark.read.parquet(bigdedupState(spark))
-        val inN = if (op.endsWith("16")) 16000000L else 4000000L
-        val incoming = graft.pipeline.DataGen.sequences(spark, inN, 64)
-        val thresh = if (op.startsWith("bigdedup_bloom")) 10000000L else -1L
-        st.dedup(incoming, knownDf, bloomPruneThreshold = thresh).count()
-      case "bloombuild" | "bloombuild_stat" => // isolate the filter build cost
-        val ids = spark.read.parquet(bigdedupState(spark))
-        if (op == "bloombuild_stat")
-          ids.stat.bloomFilter("content_id", 12000000L, 0.01)
-        else {
-          import spark.implicits._
-          val zero = org.apache.spark.util.sketch.BloomFilter.create(12000000L, 0.01)
-          ids.select(col("content_id")).as[String].rdd.coalesce(4)
-            .treeAggregate(zero)(
-              (f, s) => { f.putBinary(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)); f },
-              (a, b) => { a.mergeInPlace(b); a })
-        }
-        1L
       case other => sys.error(s"unknown op: $other")
     }
     run() // warm

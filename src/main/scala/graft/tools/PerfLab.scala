@@ -16,6 +16,10 @@ import graft.pipeline._
  *              (equal shape cost; fused jaccard_counts halved both)
  *   cond     — dump the pushed-down filter condition's composition
  *              (expression-occurrence counts; keep it JIT-small)
+ *   sinkab   — A/B output committer v1/v2 × parquet codec snappy/lz4
+ *   dictab   — A/B parquet dictionary encoding on/off
+ *   writerab — A/B sorted vs concurrent partitioned writers
+ *   crcab    — A/B parquet page write-checksums on/off
  *
  * All timings are best-of-N (additive steal-time noise on this host).
  */
@@ -33,78 +37,10 @@ object PerfLab {
     case "sinkab"  => sinkAb()
     case "dictab"  => dictAb()
     case "writerab" => writerAb()
-    case "cacheab" => cacheAb()
-    case "ckptab"  => ckptAb()
     case "crcab"   => crcAb()
     case other     => sys.error(s"unknown mode $other")
   }
 
-  /** A/B the COLUMNAR routed-cache build cost: compression on (Spark
-    * default) vs off. The cache materialization measured ~4.7 s of the
-    * ~7.5 s pipeline (PipelineProfile round 6); the token arrays compress
-    * poorly (near-random ints) so the encode work may be mostly wasted.
-    * Runs with cacheViaCheckpoint=false explicitly — the round-6 default
-    * flipped to localCheckpoint, which never builds the columnar cache
-    * this A/B exists to measure. */
-  private def cacheAb(): Unit = {
-    val best = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val variants = Seq(
-      "columnar_compressed" -> "true",
-      "columnar_raw" -> "false")
-    for (round <- 1 to 3; (name, v) <- variants) {
-      org.apache.spark.sql.SparkSession.clearActiveSession()
-      org.apache.spark.sql.SparkSession.clearDefaultSession()
-      val spark = GraftSession.builder("local[32]", 32, s"cacheab-$name")
-        .config("spark.sql.inMemoryColumnarStorage.compressed", v)
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      val cfg = Pipeline.Config(cacheViaCheckpoint = false)
-      graft.util.Scratch.withTempDir("cacheab_warm") { w =>
-        Pipeline.run(spark, DataGen.sequences(spark, 10000L, 8), w, cfg)
-      }
-      val t = graft.util.Scratch.withTempDir("cacheab") { out =>
-        time(Pipeline.run(spark, DataGen.sequences(spark, 1000000L, 64), out, cfg))
-      }
-      best(name) = math.min(best.getOrElse(name, Double.MaxValue), t)
-      println(f"ROUND $round $name%-19s $t%6.2f best=${best(name)}%6.2f")
-      spark.stop()
-    }
-    best.foreach { case (n, t) => println(f"CACHEAB $n%-19s $t%6.2f s") }
-  }
-
-  /** A/B the routed-cache MECHANISM: columnar persist (raw, the cacheab
-    * winner) vs localCheckpoint (UnsafeRow blocks, no columnar transpose
-    * at all). Interleaved like every other A/B. */
-  private def ckptAb(): Unit = {
-    val best = scala.collection.mutable.LinkedHashMap[String, Double]()
-    for (round <- 1 to 3; ckpt <- Seq(false, true)) {
-      org.apache.spark.sql.SparkSession.clearActiveSession()
-      org.apache.spark.sql.SparkSession.clearDefaultSession()
-      val spark = GraftSession.builder("local[32]", 32, s"ckptab-$ckpt").getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      graft.util.Scratch.withTempDir("ckptab_warm") { w =>
-        Pipeline.run(spark, DataGen.sequences(spark, 10000L, 8), w,
-          Pipeline.Config(cacheViaCheckpoint = ckpt))
-      }
-      val name = if (ckpt) "localCheckpoint" else "columnar_persist"
-      val t = graft.util.Scratch.withTempDir("ckptab") { out =>
-        time(Pipeline.run(spark, DataGen.sequences(spark, 1000000L, 64), out,
-          Pipeline.Config(cacheViaCheckpoint = ckpt)))
-      }
-      best(name) = math.min(best.getOrElse(name, Double.MaxValue), t)
-      println(f"ROUND $round $name%-18s $t%6.2f best=${best(name)}%6.2f")
-      spark.stop()
-    }
-    best.foreach { case (n, t) => println(f"CKPTAB $n%-18s $t%6.2f s") }
-  }
-
-  /** A/B the V1 write path's partition-sort: planned writes (3.4+ default)
-    * SORT each sink's rows by partition columns before writing so one
-    * writer is open at a time; spark.sql.maxConcurrentOutputFileWriters>0
-    * skips that sort and keeps N writers open per task. The record sinks
-    * partitionBy low-cardinality columns (5 types × 8 salts), so the
-    * open-writer count is bounded — the sort is pure overhead IF memory
-    * for concurrent writers is there. Same interleaved protocol. */
   /** Shared interleaved A/B harness: rounds of (a,b,...),(a,b,...) so all
     * variants sample the same contention epochs; fresh session per cell,
     * one warm run, best-of per variant. Every knob must be EXPLICIT in
@@ -146,6 +82,13 @@ object PerfLab {
     "crc_off" -> Seq(
       "spark.hadoop.parquet.page.write-checksum.enabled" -> "false")))
 
+  /** A/B the V1 write path's partition-sort: planned writes (3.4+ default)
+    * SORT each sink's rows by partition columns before writing so one
+    * writer is open at a time; spark.sql.maxConcurrentOutputFileWriters>0
+    * skips that sort and keeps N writers open per task. The record sinks
+    * partitionBy low-cardinality columns (5 types × 8 salts), so the
+    * open-writer count is bounded — the sort is pure overhead IF memory
+    * for concurrent writers is there. Same interleaved protocol. */
   private def writerAb(): Unit = abHarness("writerab", Seq(
     "sorted_write" -> Seq("spark.sql.maxConcurrentOutputFileWriters" -> "0"),
     "concurrent_writers" -> Seq("spark.sql.maxConcurrentOutputFileWriters" -> "48")))

@@ -29,7 +29,7 @@ object PipelineProfile {
       println(f"[profile] $name%-22s ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
     }
     val seqs = DataGen.sequences(spark, n, cpus * 2)
-    // localCheckpoint — the Pipeline.run default since round 6 (ckptab A/B)
+    // localCheckpoint — the one materialization Pipeline.run uses
     val filtered = FilterStage.applyStatic(Parse.deriveFields(seqs), DataGen.routingRules)
       .localCheckpoint(eager = false)
     time("materialize cache")(filtered.count())

@@ -41,8 +41,7 @@ class CatalogStateSpec extends SparkSuite {
     val b = new CatalogStateBackend("graft_state_dedup")
     b.commit(spark, Seq("x", "y").toDF("doc_id"), "doc_id", future, now)
     val incoming = Seq("x", "y", "z").toDF("doc_id")
-    val fresh = StateStore.dedup(incoming, b.load(spark, now),
-      knownSizeHint = b.sizeHint(spark))
+    val fresh = StateStore.dedup(incoming, b.load(spark, now))
     assert(fresh.as[String].collect() === Array("z"))
   }
 
@@ -93,8 +92,7 @@ class CatalogStateSpec extends SparkSuite {
     val b = v2Backend("dedup")
     b.commit(spark, Seq("x", "y").toDF("doc_id"), "doc_id", future, now)
     val incoming = Seq("x", "y", "z").toDF("doc_id")
-    val fresh = StateStore.dedup(incoming, b.load(spark, now),
-      knownSizeHint = b.sizeHint(spark))
+    val fresh = StateStore.dedup(incoming, b.load(spark, now))
     assert(fresh.as[String].collect() === Array("z"))
     // a SECOND backend instance over the same table sees the committed
     // state (reads go through the catalog, not instance memory)

@@ -80,93 +80,49 @@ class StateStoreSpec extends SparkSuite {
     assert(loose.count() === 6)
   }
 
+  // The next four names date from the Bloom pre-prune that dedup once had;
+  // each now checks the plain anti-join the prune was compared against.
   test("bloom-pruned dedup ≡ plain anti-join (prune is lossless by construction)") {
     val st = new StateStore(tmpDir("st_bloom"))
     val knownIds = (0 until 500).map(i => f"doc-$i%012d")
     st.commit(spark, knownIds.toDF("doc_id"), "doc_id", future, now)
     val incoming = (0 until 1000).map(i => f"doc-$i%012d").toDF("doc_id")
-    val known = st.load(spark, now)
-    val plain = st.dedup(incoming, known, bloomPruneThreshold = -1L)
-      .as[String].collect().toSet
-    // threshold 0 forces the bloom path at any state size
-    val pruned = st.dedup(incoming, known, bloomPruneThreshold = 0L)
-      .as[String].collect().toSet
+    val plain = st.dedup(incoming, st.load(spark, now)).as[String].collect().toSet
     assert(plain === (500 until 1000).map(i => f"doc-$i%012d").toSet)
-    assert(pruned === plain)
-    // and the pruned plan actually probes a bloom filter scan-side — use a
-    // parquet-backed incoming (a LocalRelation gets its deterministic
-    // filters constant-folded away at optimize time, hiding the probe)
-    val inDir = tmpDir("st_bloom_in")
-    incoming.write.mode("overwrite").parquet(inDir)
-    val plan = st.dedup(spark.read.parquet(inDir), known, bloomPruneThreshold = 0L)
-      .queryExecution.executedPlan.toString
-    assert(plan.toLowerCase.contains("bloommightcontain"), s"plan:\n$plan")
   }
 
   test("bloom-pruned dedup ≡ plain anti-join for LONG ids (builder/probe hash domains match)") {
-    // ADVICE r3: the builder inserted UTF-8 bytes of the string cast while
-    // the probe hashed raw longs for integral id columns — ~every known
-    // long id false-negatived and passed dedup as a duplicate. The builder
-    // now putLong()s integral ids, matching mightContainLong.
     val st = new StateStore(tmpDir("st_bloom_long"))
     val known = spark.range(0, 500).select(col("id").as("content_id"))
     val incoming = spark.range(0, 1000).select(col("id").as("doc_id"))
-    val plain = st.dedup(incoming, known, bloomPruneThreshold = -1L)
-      .as[Long].collect().toSet
-    val pruned = st.dedup(incoming, known, bloomPruneThreshold = 0L)
-      .as[Long].collect().toSet
-    assert(plain === (500L until 1000L).toSet)
-    assert(pruned === plain,
-      "a hash-domain drift between bloom builder and probe silently passes duplicates")
-    // int ids take the same putLong/mightContainLong path
-    val knownInt = spark.range(0, 500).select(col("id").cast("int").as("content_id"))
-    val incomingInt = spark.range(0, 1000).select(col("id").cast("int").as("doc_id"))
-    assert(st.dedup(incomingInt, knownInt, bloomPruneThreshold = 0L).count() === 500)
+    assert(st.dedup(incoming, known).as[Long].collect().toSet === (500L until 1000L).toSet)
+    val knownInt = known.select(col("content_id").cast("int"))
+    val incomingInt = incoming.select(col("doc_id").cast("int"))
+    assert(st.dedup(incomingInt, knownInt).as[Int].collect().toSet === (500 until 1000).toSet)
   }
 
   test("MIXED-type ids (string state, long incoming) fall back to the plain join under bloom settings") {
-    // The real store persists content_id as STRING (commit casts), so a
-    // caller deduping long incoming ids against it mixes types. There is
-    // no single hash domain in which a bloom provably mirrors the join's
-    // type-coercion equality, so the prune must decline — not guess and
-    // risk a false negative that passes duplicates.
+    // the store persists content_id as STRING (commit casts), so long
+    // incoming ids mix types: join-time coercion must still match them
     val st = new StateStore(tmpDir("st_bloom_mixed"))
     st.commit(spark, spark.range(0, 500).select(col("id").as("doc_id")),
-      "doc_id", future, now) // commits as string content_id
+      "doc_id", future, now)
     val incoming = spark.range(0, 1000).select(col("id").as("doc_id"))
     val known = st.load(spark, now)
     assert(known.schema("content_id").dataType ===
       org.apache.spark.sql.types.StringType)
-    val plain = st.dedup(incoming, known, bloomPruneThreshold = -1L)
-      .as[Long].collect().toSet
-    val viaBloomSettings = st.dedup(incoming, known, bloomPruneThreshold = 0L)
-      .as[Long].collect().toSet
-    assert(plain === (500L until 1000L).toSet,
+    assert(st.dedup(incoming, known).as[Long].collect().toSet === (500L until 1000L).toSet,
       "join-time coercion must dedup long incoming against string state")
-    assert(viaBloomSettings === plain,
-      "mixed-type dedup with bloom settings must not diverge from the plain join")
-    // and no bloom probe appears in the plan (the prune declined)
-    val plan = st.dedup(incoming, known, bloomPruneThreshold = 0L)
-      .queryExecution.executedPlan.toString
-    assert(!plan.toLowerCase.contains("bloommightcontain"), s"plan:\n$plan")
   }
 
   test("bloom path keeps NULL-id rows (plain anti-join semantics) and tolerates null state ids") {
-    // ADVICE r3: both filter(might) and filter(!might) are NULL for a null
-    // id — the bloom path silently dropped exactly the malformed rows the
-    // plain anti-join keeps (a null key never matches). Null ids now route
-    // down the definitely-fresh branch explicitly, and null STATE ids are
-    // skipped by the builder instead of NPE-ing the treeAggregate.
+    // a null key never matches, so null-id rows are kept, also against
+    // null state ids
     val st = new StateStore(tmpDir("st_bloom_null"))
     val known = Seq(Some("a"), Some("b"), None).toDF("content_id")
     val incoming = Seq(Some("a"), Some("c"), None, None).toDF("doc_id")
-    val plain = st.dedup(incoming, known, bloomPruneThreshold = -1L)
-      .as[Option[String]].collect().sortBy(_.getOrElse(""))
-    val pruned = st.dedup(incoming, known, bloomPruneThreshold = 0L)
-      .as[Option[String]].collect().sortBy(_.getOrElse(""))
-    assert(plain.toSeq === Seq(None, None, Some("c")))
-    assert(pruned.toSeq === plain.toSeq,
-      "the bloom prune must not drop null-id rows the plain anti-join keeps")
+    assert(st.dedup(incoming, known).as[Option[String]].collect()
+      .sortBy(_.getOrElse("")).toSeq === Seq(None, None, Some("c")))
   }
 
   test("liveRowCount: memoized per snapshot, incremental across commits, survives compact") {
@@ -179,26 +135,6 @@ class StateStoreSpec extends SparkSuite {
     assert(st.liveRowCount(spark) === 5) // incremental: only the new delta counted
     st.compact(spark)
     assert(st.liveRowCount(spark) === 5) // history rewritten → full recount path
-  }
-
-  test("bloom_might_contain: zero false negatives over every inserted id") {
-    import org.apache.spark.util.sketch.BloomFilter
-    val bf = BloomFilter.create(1000, 0.01)
-    (0 until 1000).foreach(i =>
-      bf.putBinary(f"doc-$i%012d".getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    val probes = (0 until 2000).map(i => f"doc-$i%012d").toDF("doc_id")
-    val hits = probes.filter(
-      graft.functions.GraftFunctions.bloom_might_contain(col("doc_id"), bf))
-      .as[String].collect().toSet
-    val inserted = (0 until 1000).map(i => f"doc-$i%012d").toSet
-    assert(inserted.subsetOf(hits), "a Bloom filter must never false-negative")
-    val fpRate = (hits -- inserted).size.toDouble / 1000
-    assert(fpRate < 0.05, s"false-positive rate $fpRate far above configured 1%")
-    // non-id types are rejected at analysis time
-    intercept[org.apache.spark.sql.AnalysisException] {
-      Seq(1.5).toDF("x").select(
-        graft.functions.GraftFunctions.bloom_might_contain(col("x"), bf)).collect()
-    }
   }
 
   test("merge: re-arrival updates expiration via last-writer-wins (MERGE upsert)") {
