@@ -220,7 +220,7 @@ object TrainingOps {
       .distinct()
     // no scan floor: the round-6 A/B measured the floored variant
     // 0.61 → 0.77 s — shingling is cheap per row and the repartition buys
-    // less than it costs (OpTime decon vs decon_raw)
+    // less than it costs (OPTIMIZATION_r06.md, training ops)
     corpus.select(col(idCol).as("id"),
         explode(graft.functions.GraftFunctions.shingle_hashes(col(textCol), n))
           .as("tok"))

@@ -40,9 +40,10 @@ object GraftSession {
       // collect_list-heaviest op); for corpora of very large documents
       // (≫100 KB) lower it back toward the default.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      // Sink-write I/O (PerfLab sinkab, interleaved best-of-3 at 10^6 rows):
-      // committer v2 renames task files in the tasks instead of serially on
-      // the driver at job commit (9.4 → 8.2 s headline), and lz4_raw trades
+      // Sink-write I/O (interleaved best-of-3 at 10^6 rows, BASELINE.md
+      // round-4 flagship-pipeline row): committer v2 renames task files in
+      // the tasks instead of serially on the driver at job commit
+      // (9.4 → 8.2 s headline), and lz4_raw trades
       // a few % of parquet compression ratio for a faster encode than snappy
       // (→ 7.6 s combined; lz4_raw is the spec-standard LZ4 block encoding —
       // plain "lz4" writes deprecated Hadoop-framed LZ4 that external
@@ -56,21 +57,14 @@ object GraftSession {
       // storage cost outweighs write CPU.
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
       .config("spark.sql.parquet.compression.codec", "lz4_raw")
-      // Dictionary encoding OFF (PerfLab dictab, 3 interleaved rounds:
-      // dict_on best 7.48 s vs dict_off 6.33 s on the full pipeline, off
-      // won every round): the record sinks write near-unique string
-      // columns (per-row JSON bodies, token-array JSON) where the page
-      // dictionary fills, falls back to plain, and the build work is
-      // discarded. Flip back on for workloads writing low-cardinality
-      // string columns at volume.
+      // Dictionary encoding OFF (3 interleaved rounds, BASELINE.md round-5
+      // dictionary A/B row: dict_on best 7.48 s vs dict_off 6.33 s on the
+      // full pipeline, off won every round): the record sinks write
+      // near-unique string columns (per-row JSON bodies, token-array JSON)
+      // where the page dictionary fills, falls back to plain, and the build
+      // work is discarded. Flip back on for workloads writing
+      // low-cardinality string columns at volume.
       .config("spark.hadoop.parquet.enable.dictionary", "false")
-      // Parquet page write-checksums off (PerfLab crcab, 3 interleaved
-      // rounds, off won all three, best 6.70 vs 6.98 s full pipeline):
-      // pure CPU on the sink-write path, and the format treats page CRCs
-      // as optional so every reader is unaffected. Trade-off: no
-      // page-level corruption detection on sink files — re-enable where
-      // long-lived storage integrity outweighs write throughput.
-      .config("spark.hadoop.parquet.page.write-checksum.enabled", "false")
       // Columnar-cache compression OFF (6 interleaved full-pipeline rounds
       // over a columnar routed cache across two contention epochs: raw won
       // 4/6, best 6.21 s vs 7.39 s): the dominant column of the routed

@@ -79,9 +79,8 @@ object StreamingPipeline {
             val routed = Pipeline.routedRecords(inflated, cfg.rules, cfg.enabledTypes)
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             try {
-              routed.write.mode("overwrite").parquet(batchDir.toString)
-              Sinks.prtgShape(routed)
-                .write.mode("overwrite").parquet(s"$outDir/prtg_batches/batch_id=$batchId")
+              Sinks.write(routed, batchDir.toString)
+              Sinks.write(Sinks.prtgShape(routed), s"$outDir/prtg_batches/batch_id=$batchId")
               transport.foreach(send => send(routed))
               routedTotal.addAndGet(routed.count())
               // commit all received ids (filtered rows included — reference

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.pipeline._
 import graft.ops._
@@ -10,13 +10,7 @@ import graft.ops._
   * want (pushdown, pruning, broadcast, single-exchange aggs, codegen). */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(8, "dump-plans")
     val sf = "/root/testdata/sf0.01"
     def t(n: String) = spark.read.parquet(s"$sf/$n.parquet")
 

@@ -3,16 +3,19 @@ package graft.tools
 import org.apache.spark.sql.functions._
 import graft.ops._
 
-/** One-off single-operator timer: `runMain graft.tools.OpTime <op> [sfDir]`.
+/** Single-operator timer: `runMain graft.tools.OpTime <op> [sfDir]`.
   * Best-of-2 after a warm run — for iterating on one op without paying the
-  * full Bench sweep. */
+  * full Bench sweep. Cores come from SPARK_GRAFT_CPUS (as in Bench); the
+  * `ivf`, `hier` and `pq` modes also print their two phases per run, with
+  * Bench's index parameters. Whole-pipeline timing is perfbench's job. */
 object OpTime {
 
   def main(args: Array[String]): Unit = {
     val op = args.headOption.getOrElse("ngram")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // SPARK_GRAFT_EXTRA_CONF="k=v;k=v" — ad-hoc conf override for A/Bs
-    val b0 = graft.pipeline.GraftSession.builder("local[32]", 32, "optime")
+    val b0 = graft.pipeline.GraftSession.builder(s"local[$cpus]", cpus, "optime")
     val b = sys.env.get("SPARK_GRAFT_EXTRA_CONF").map(_.split(";").toSeq)
       .getOrElse(Nil).filter(_.contains("="))
       .foldLeft(b0) { (acc, kv) =>
@@ -21,21 +24,20 @@ object OpTime {
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def t(name: String) = spark.read.parquet(s"$sfDir/$name.parquet")
+    def phase[A](name: String)(f: => A): A = {
+      val t0 = System.nanoTime(); val r = f
+      println(f"[optime]   $op $name=${(System.nanoTime() - t0) / 1e9}%.2fs"); r
+    }
+    // IVF centroids ~sqrt(n), hier coarse cells ~sqrt(centroids) (Bench)
+    lazy val ivfCentroids =
+      math.max(16, math.sqrt(t("embeddings").count().toDouble).ceil.toInt)
     def run(): Long = op match {
       case "ngram" =>
         DedupOps.ngramJaccardPairs(t("documents"), "doc_id", "text", "lang", 2, 55).count()
-      case "decon" | "decon_raw" => // floored vs raw corpus-side scan
+      case "decon" => // every 97th document is the eval set
         val docs = t("documents")
-        val corpus0 = docs.filter(pmod(col("doc_id"), lit(97)) =!= 0)
-        val corpus = if (op == "decon") graft.util.Par.ensure(corpus0) else corpus0
-        val evalSet = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
-        val testShingles = evalSet.select(
-            explode(graft.functions.GraftFunctions.shingle_hashes(col("text"), 2)).as("tok"))
-          .distinct()
-        corpus.select(col("doc_id").as("id"),
-            explode(graft.functions.GraftFunctions.shingle_hashes(col("text"), 2)).as("tok"))
-          .join(broadcast(testShingles), Seq("tok"))
-          .groupBy("id").agg(count(lit(1)).as("n_hits")).count()
+        TrainingOps.decontaminate(docs.filter(pmod(col("doc_id"), lit(97)) =!= 0),
+          "doc_id", "text", docs.filter(pmod(col("doc_id"), lit(97)) === 0), "text", 2).count()
       case "clusters" =>
         DedupOps.nearDupClusters(t("documents"), "doc_id", "text").count()
       case "minhash" =>
@@ -43,31 +45,34 @@ object OpTime {
       case "spans" =>
         DedupOps.spanDedup(t("documents"), "doc_id", "text", 8).count()
       case "lsh" =>
-        val n = t("embeddings").count()
-        val bits = SimilarityOps.occupancyBits(n)
+        val bits = SimilarityOps.occupancyBits(t("embeddings").count())
         SimilarityOps.lshTopK(t("embeddings"), "vec_id", "embedding", 1, bits, 8).count()
       case "embdup" =>
         SimilarityOps.embeddingNearDups(t("embeddings"), "vec_id", "embedding", 0.99).count()
       case "ivf" =>
-        val n = t("embeddings").count()
-        val c = math.max(16, math.sqrt(n.toDouble).ceil.toInt)
-        val t0 = System.nanoTime()
-        val idx = SimilarityOps.buildIvfIndex(t("embeddings"), "vec_id", "embedding", c).materialize()
-        val t1 = System.nanoTime()
-        val r = SimilarityOps.ivfProbe(idx, t("embeddings"), "vec_id", "embedding", 1, 8).count()
-        println(f"[optime]   ivf build=${(t1 - t0) / 1e9}%.2fs probe=${(System.nanoTime() - t1) / 1e9}%.2fs")
-        idx.unpersist(); r
-      case "pipe" =>
-        graft.util.Scratch.withTempDir("optime_pipe") { outDir =>
-          graft.pipeline.Pipeline.run(spark,
-            graft.pipeline.DataGen.sequences(spark, 1000000L, 64), outDir).stats.rowsRouted
+        val idx = phase("build")(SimilarityOps.buildIvfIndex(t("embeddings"), "vec_id",
+          "embedding", ivfCentroids).materialize())
+        try phase("probe")(SimilarityOps.ivfProbe(idx, t("embeddings"), "vec_id",
+          "embedding", 1, 8).count())
+        finally idx.unpersist()
+      case "hier" =>
+        val hc = math.max(4, math.sqrt(ivfCentroids.toDouble).ceil.toInt)
+        val idx = phase("build")(SimilarityOps.buildHierIvfIndex(t("embeddings"), "vec_id",
+          "embedding", hc, hc).materialize())
+        try phase("probe")(SimilarityOps.hierIvfProbe(idx, t("embeddings"), "vec_id",
+          "embedding", 1, 4, 8).count())
+        finally idx.unpersist()
+      case "pq" =>
+        val e = t("embeddings")
+        val (cb, codes) = phase("train+encode") {
+          val cb = SimilarityOps.pqTrainCodebook(e, "vec_id", "embedding",
+            m = 8, ksub = 64, iters = 2)
+          val codes = SimilarityOps.pqEncode(e, "vec_id", "embedding", cb).persist()
+          codes.count(); (cb, codes)
         }
-      case "pipe0" => // A/B: file sizing disabled (one file per cache partition)
-        graft.util.Scratch.withTempDir("optime_pipe0") { outDir =>
-          graft.pipeline.Pipeline.run(spark,
-            graft.pipeline.DataGen.sequences(spark, 1000000L, 64), outDir,
-            graft.pipeline.Pipeline.Config(targetRowsPerFile = 0L)).stats.rowsRouted
-        }
+        try phase("rerank")(SimilarityOps.pqRerankTopK(codes, e, e, "vec_id", "embedding",
+          cb, k = 1, shortlist = 20).count())
+        finally codes.unpersist()
       case other => sys.error(s"unknown op: $other")
     }
     run() // warm

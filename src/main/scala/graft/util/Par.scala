@@ -11,7 +11,7 @@ import org.apache.spark.sql.DataFrame
  * two unsplittable parquet row groups therefore runs that stage on one
  * core, whatever the cluster size: at sf0.1 the 2 000-row embeddings table
  * is a single file, and the brute-force scorer measured 2.99 s single-task
- * vs 0.27 s repartitioned at local[32] (R06Measure).
+ * vs 0.27 s repartitioned at local[32] (OPTIMIZATION_r06.md).
  *
  * `ensure` floors a *scan-shaped* input's partitioning at the session
  * default parallelism. It is deliberately conservative so it can never

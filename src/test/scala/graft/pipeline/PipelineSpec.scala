@@ -1,6 +1,10 @@
 package graft.pipeline
 
 import graft.SparkSuite
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.Util
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.functions._
 
 class PipelineSpec extends SparkSuite {
@@ -158,5 +162,51 @@ class PipelineSpec extends SparkSuite {
     val df = graft.SparkEntry.entry(spark)
     val rows = df.as[(String, Long)].collect().toMap
     assert(rows.nonEmpty && rows.values.forall(_ > 0))
+  }
+
+  test("sink files are written without parquet page CRCs; state snapshots keep them") {
+    val out = tmpDir("pipe_crc")
+    Pipeline.run(spark, DataGen.sequences(spark, 2000L, 4), out)
+    // header of the first page of the first column chunk, read with parquet-mr
+    def firstPageHasCrc(dir: String): Boolean = {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+        .map(f => HadoopInputFile.fromPath(new Path(f.toURI), conf))
+      val (in, pos) = files.iterator.flatMap { in =>
+        val reader = ParquetFileReader.open(in)
+        val blocks = try reader.getFooter.getBlocks finally reader.close()
+        if (blocks.isEmpty) None else Some((in, blocks.get(0).getColumns.get(0).getStartingPos))
+      }.next()
+      val stream = in.newStream()
+      try { stream.seek(pos); Util.readPageHeader(stream).isSetCrc } finally stream.close()
+    }
+    assert(!firstPageHasCrc(s"$out/checksums"), "sink page carries a CRC")
+    val st = new StateStore(s"$out/state")
+    assert(firstPageHasCrc(st.snapshotPath(st.currentSnapshot.get)), "state page has no CRC")
+  }
+
+  test("a failing sink fails the run with its own error, leaves no job running and " +
+       "commits no state; the re-run matches a clean run") {
+    val seqs = DataGen.sequences(spark, 2000L, 4)
+    val cfg = Pipeline.Config(output = Some(OutputConfig(
+      file = Some(FileOutputConfig(path = "blocked/output.csv")))))
+    val out = tmpDir("pipe_fail")
+    // the file sink's parent is a regular file: the write fails even as root
+    val blocker = java.nio.file.Paths.get(s"$out/blocked")
+    java.nio.file.Files.write(blocker, Array.emptyByteArray)
+    val err = intercept[java.io.IOException](Pipeline.run(spark, seqs, out, cfg))
+    assert(err.getMessage.contains(s"$out/blocked"), s"not the file sink's error: $err")
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+      "a sink job is still running after run() returned")
+    assert(new StateStore(s"$out/state").currentSnapshot.isEmpty, "state committed")
+
+    java.nio.file.Files.delete(blocker)
+    val rerun = Pipeline.run(spark, seqs, out, cfg)
+    val clean = tmpDir("pipe_fail_clean")
+    val reference = Pipeline.run(spark, seqs, clean, cfg)
+    assert(rerun.stats === reference.stats)
+    def checksums(dir: String) =
+      spark.read.parquet(s"$dir/checksums").as[(String, Long, Long)].collect().sorted
+    assert(checksums(out) === checksums(clean))
   }
 }
