@@ -103,9 +103,6 @@ object InMemoryTableCatalog {
   // but the tables must survive across them (and across the fresh plugin
   // instance a second SparkSession would build)
   private val store = new util.concurrent.ConcurrentHashMap[TableKey, MemTable]()
-
-  /** Drop every table of every registered in-memory catalog (test hygiene). */
-  def clearAll(): Unit = store.clear()
 }
 
 /** A V2 table over a driver-held row buffer: batch read + append. */

@@ -263,9 +263,6 @@ object Multimodal {
     }
   }
 
-  /** Back-compat alias (round-1 name). */
-  def decodeStub(media: Dataset[MediaRow]): Dataset[DecodedMedia] = decode(media)
-
   private def poison(m: MediaRow): DecodedMedia =
     DecodedMedia(m.media_id, m.media_type, ok = false, 0, 0, 0, Array.empty)
 

@@ -75,9 +75,4 @@ object DataGen {
     RoutingRule("Audit.General", "Policy", "Spoof"),
     RoutingRule("Audit.AzureActiveDirectory", "operation", "UserLoginFailed"),
     RoutingRule("Audit.SharePoint", "operation", "FileDeleted"))
-
-  def routingRulesDf(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    routingRules.toDF()
-  }
 }

@@ -1,7 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** Per-run metric counters — mirrors RunStatistics
   * (reference: src/data_structures.rs:144-150, printed at
@@ -108,10 +111,10 @@ object Pipeline {
 
   /**
    * Full run: read → dedup → parse → filter → route → write sinks →
-   * commit state. Returns per-stage counts (the reference's found/saved
-   * statistics) computed as cheap aggregations over the materialized
-   * filtered set plus parquet-footer counts — no extra full pass over the
-   * input.
+   * commit state. The one materialising pass observes every count the run
+   * reports (rows parsed, routed and quarantined per emitting partition),
+   * so the `metrics` sink and the per-stage counts cost no extra job; only
+   * the input count and the state commit read the input again.
    */
   def run(spark: SparkSession, sequences: DataFrame, outDir: String,
           cfg: Config = Config()): Result = {
@@ -125,9 +128,16 @@ object Pipeline {
     // parsed/filtered/dropped per-partition metrics share one lineage
     // (north-rule per-partition lineage; the filter is narrow so the id is
     // exactly the task that parsed the row).
+    val parsedSeen = new Observation()
+    val filteredSeen = new Observation()
+    val pid = col("__pid")
     val parsed = Parse.deriveFields(inflated)
       .withColumn("__pid", spark_partition_id())
+      .observe(parsedSeen, RowsPerKey(pid).as("parsed"))
     val filtered = subscribedAndFiltered(parsed, cfg.rules, cfg.enabledTypes)
+      .observe(filteredSeen,
+        RowsPerKey(when(Route.isKnown, pid)).as("routed"),
+        RowsPerKey(when(Route.isQuarantined, pid)).as("quarantined"))
 
     // One materialization feeds all sinks + quarantine (the reference clones
     // the batch per interface, src/collector.rs:215-226; we materialize
@@ -136,18 +146,25 @@ object Pipeline {
     // encode of the token arrays buys nothing — in interleaved A/Bs it
     // lost every pair by about 10% of run time, and recomputing per sink
     // instead of materializing cost 15.8 s against 6.6 s (BASELINE.md).
+    // Eager, because an Observation is filled only by the action that runs
+    // the observed plan: a lazy checkpoint would be built by a later
+    // action whose plan no longer holds the observed nodes.
     // Trade-off: a localCheckpoint truncates lineage, so a lost executor
     // fails the job instead of recomputing; the run is idempotent by the
     // overwrite contract, so a re-run is safe.
-    val filteredCached = filtered.localCheckpoint(eager = false)
-    val quarantineP = Route.quarantined(filteredCached)
-    val routedP = Route.routed(filteredCached)
-    val quarantine = quarantineP.drop("__pid")
-    val cached = routedP.drop("__pid")
+    val filteredCached = filtered.localCheckpoint(eager = true)
     try {
-      // Materialize the shared cache once (otherwise the first concurrent
-      // sink job would build it while the others wait on cache locks).
-      val routedCount = cached.count()
+      val parsedPerPart = observedCounts(parsedSeen, "parsed")
+      val routedPerPart = observedCounts(filteredSeen, "routed")
+      val quarantinedPerPart = observedCounts(filteredSeen, "quarantined")
+      val filteredPerPart = (routedPerPart.keySet ++ quarantinedPerPart.keySet).map { p =>
+        p -> (routedPerPart.getOrElse(p, 0L) + quarantinedPerPart.getOrElse(p, 0L))
+      }.toMap
+      val routedCount = routedPerPart.values.sum
+      val quarantinedCount = quarantinedPerPart.values.sum
+      val quarantine = Route.quarantined(filteredCached).drop("__pid")
+      val cached = Route.routed(filteredCached).drop("__pid")
+
       // Output-file sizing for the record sinks (see targetRowsPerFile):
       // never expands parallelism, only merges under-filled partitions —
       // and the MERGE is floored at the session default parallelism
@@ -174,30 +191,24 @@ object Pipeline {
       def sized(df: DataFrame) = sizedBy(df, routedCount)
       // quarantine sized from ITS OWN count (usually ≈0; sizing it from the
       // routed count writes near-empty files when rules are lax and
-      // oversized ones when they are strict) — a cache-served count
-      val quarantineSized = sizedBy(quarantine, quarantine.count())
+      // oversized ones when they are strict)
+      val quarantineSized = sizedBy(quarantine, quarantinedCount)
 
       val salted = Route.saltedForWrite(cached, cfg.saltBuckets)
       // Per-partition lineage metrics (north rule): rows parsed / routed /
-      // quarantined per emitting task, plus dropped-by-filter derived per
-      // partition — all keyed on the __pid stamped before the filter, so
-      // every stage shares one partition lineage.
-      def perPartition(df: DataFrame, stage: String) =
-        df.groupBy(col("__pid").as("partition_id"))
-          .agg(count(lit(1)).as("rows"))
-          .select(lit(stage).as("stage"), col("partition_id"), col("rows"))
-      val parsedPerPart = perPartition(parsed, "parsed")
-      val filteredPerPart = perPartition(filteredCached, "filtered")
-      val droppedPerPart = parsedPerPart.select(col("partition_id"), col("rows").as("p_rows"))
-        .join(filteredPerPart.select(col("partition_id"), col("rows").as("f_rows")),
-          Seq("partition_id"), "left_outer")
-        .select(lit("dropped_by_filter").as("stage"), col("partition_id"),
-          (col("p_rows") - coalesce(col("f_rows"), lit(0L))).as("rows"))
-      val partMetrics = perPartition(routedP, "routed")
-        .unionByName(filteredPerPart)
-        .unionByName(parsedPerPart)
-        .unionByName(droppedPerPart)
-        .unionByName(perPartition(quarantineP, "quarantined"))
+      // quarantined per emitting task, plus dropped-by-filter for every
+      // parsed partition — all keyed on the __pid stamped before the
+      // filter, so every stage shares one partition lineage. Built on the
+      // driver from the observed counts: a few rows, no job.
+      def stageRows(stage: String, perPart: Map[Int, Long]) =
+        perPart.toSeq.sortBy(_._1).map { case (p, n) => Row(stage, p, n) }
+      val partMetrics = spark.createDataFrame(java.util.Arrays.asList(
+        (stageRows("routed", routedPerPart) ++
+         stageRows("filtered", filteredPerPart) ++
+         stageRows("parsed", parsedPerPart) ++
+         stageRows("dropped_by_filter", parsedPerPart.map { case (p, n) =>
+           p -> (n - filteredPerPart.getOrElse(p, 0L)) }) ++
+         stageRows("quarantined", quarantinedPerPart)): _*), Schemas.metrics)
       val recordSinks: Seq[() => Unit] = cfg.output match {
         case None => Seq( // engine default: all sink shapes
           () => Sinks.write(Sinks.fileCsvShape(salted), s"$outDir/file_csv", Seq("content_type")),
@@ -228,34 +239,57 @@ object Pipeline {
       // State commit strictly AFTER all sink writes (resume contract).
       // The reference marks every RECEIVED blob known, including rows the
       // filter later drops (src/collector.rs:161 precedes the filter at
-      // :176-184) — so commit all fresh ids, not just routed ones. This is
-      // a second, column-pruned pass over the input (doc_id only), cheaper
-      // at scale than keeping the pre-filter set cached through the fan-out.
+      // :176-184) — so commit all fresh ids, not just routed ones. This
+      // re-runs scan → dedup, column-pruned to doc_id: cheaper at scale
+      // than keeping the pre-filter ids cached through the fan-out.
       val rowsFresh = backend.commit(spark, fresh.select("doc_id"), "doc_id",
         cfg.expirationEpochSec, cfg.nowEpochSec)
 
-      // Stats: all counts are either storage metadata counts (input,
-      // committed snapshot — backend.commit returns the footer count) or
-      // served from the materialized filtered set — no extra full passes
-      // (reference's RunStatistics, A1/A4).
+      // Stats (the reference's RunStatistics, A1/A4): the committed count
+      // is the snapshot's footer count (backend.commit returns it), the
+      // input count one scan, and the rest was observed by the
+      // materialising pass.
       val rowsIn = sequences.count()
-      val rowsFiltered = filteredCached.count()
-      val rowsRouted = cached.count()
+      val rowsFiltered = routedCount + quarantinedCount
       val stats = RunStats(
         rowsIn = rowsIn,
         rowsDeduped = rowsIn - rowsFresh,
         // dropped-by-filter includes rows of non-subscribed content types
         // (reference: unsubscribed feeds are never fetched at all)
         rowsDroppedByFilter = rowsFresh * cfg.duplicate - rowsFiltered,
-        rowsQuarantined = rowsFiltered - rowsRouted,
-        rowsRouted = rowsRouted)
+        rowsQuarantined = quarantinedCount,
+        rowsRouted = routedCount)
       Result(stats, backend.currentVersion)
     } finally {
       // deterministic release (the ContextCleaner would otherwise wait for
-      // GC): safe because fanOut has settled every sink job and every stat
-      // is collected before this point — nothing re-reads the blocks
+      // GC): safe because fanOut has settled every sink job and no stat
+      // reads the blocks
       org.apache.spark.sql.graftglue.RddGlue.checkpointRdd(filteredCached)
         .foreach(_.unpersist(blocking = false))
     }
   }
+
+  /** One observed per-partition count map, keyed by `__pid`. */
+  private def observedCounts(o: Observation, name: String): Map[Int, Long] =
+    o.get(name).asInstanceOf[scala.collection.Map[Int, Long]].toMap
+
+  /** Exact rows per non-null Int key, for `Dataset.observe`: Spark has no
+    * exact per-key count aggregate (only sketches and the approximate
+    * `histogram_numeric`). A NULL key counts nowhere, so `when(p, key)`
+    * counts the rows that satisfy `p`. */
+  private type Counts = mutable.HashMap[Int, Long]
+  private val RowsPerKey = udaf(new Aggregator[java.lang.Integer, Counts, Map[Int, Long]] {
+    def zero: Counts = mutable.HashMap.empty
+    def reduce(b: Counts, k: java.lang.Integer): Counts = {
+      if (k != null) b(k) = b.getOrElse(k, 0L) + 1L
+      b
+    }
+    def merge(a: Counts, b: Counts): Counts = {
+      b.foreach { case (k, n) => a(k) = a.getOrElse(k, 0L) + n }
+      a
+    }
+    def finish(b: Counts): Map[Int, Long] = b.toMap
+    def bufferEncoder: Encoder[Counts] = ExpressionEncoder()
+    def outputEncoder: Encoder[Map[Int, Long]] = ExpressionEncoder()
+  }, Encoders.INT)
 }

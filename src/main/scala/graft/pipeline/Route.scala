@@ -22,14 +22,16 @@ object Route {
   /** Rows routed to a known bucket. */
   def routed(df: DataFrame): DataFrame = withOriginFeed(df.filter(isKnown))
 
+  /** Unknown OR NULL content type. The isNull arm matters: `!isKnown`
+    * alone evaluates to NULL for a NULL content_type (e.g. a malformed doc
+    * id whose audit fields null-gated), and a NULL predicate excludes the
+    * row from BOTH routed() and quarantined() — silent data loss where the
+    * contract promises quarantine. */
+  val isQuarantined: Column = col("content_type").isNull || !isKnown
+
   /** Quarantine: rows with unknown OR NULL content types (the reference's
-    * warn-and-drop, made observable as a DataFrame). The isNull arm
-    * matters: `!isKnown` alone evaluates to NULL for a NULL content_type
-    * (e.g. a malformed doc id whose audit fields null-gated), and a NULL
-    * predicate excludes the row from BOTH routed() and quarantined() —
-    * silent data loss where the contract promises quarantine. */
-  def quarantined(df: DataFrame): DataFrame =
-    df.filter(col("content_type").isNull || !isKnown)
+    * warn-and-drop, made observable as a DataFrame). */
+  def quarantined(df: DataFrame): DataFrame = df.filter(isQuarantined)
 
   /**
    * Skew-aware repartition for the write fan-out. content_type is highly

@@ -78,11 +78,6 @@ object Sinks {
   def prtgShape(df: DataFrame): DataFrame =
     df.groupBy("content_type", "operation").agg(count(lit(1)).as("cnt"))
 
-  /** Interactive sink (reference: src/interfaces/interactive_interface.rs:
-    * 24-39): bounded 1000-row view, newest first. */
-  def interactiveShape(df: DataFrame): DataFrame =
-    df.orderBy(col("CreationTime").desc, col("doc_id")).limit(1000)
-
   /**
    * Order-insensitive routed-row checksum per sink bucket (SURVEY.md §2.4
    * A9): bit_xor of xxhash64(doc_id, tokens) — commutative, so invariant

@@ -123,13 +123,8 @@ class StateStore(val dir: String) {
             expirationEpochSec: Long, commitEpochSec: Long): Int =
     commit(spark, incoming, idCol, expirationEpochSec, commitEpochSec)
 
-  /**
-   * Dedup: anti-join incoming rows against known content ids
-   * (SURVEY.md §2.3 J1 — the reference's `known_blobs.contains_key` probe
-   * IS a broadcast hash anti-join). While state is small Catalyst/AQE picks
-   * BroadcastHashJoin; at 10^12-scale state it degrades gracefully to a
-   * shuffled hash/sort-merge anti-join on the id — no code change.
-   */
+  /** Dedup: anti-join incoming rows against known content ids — see
+    * [[StateStore.dedup]]. */
   def dedup(incoming: DataFrame, known: DataFrame, idCol: String = "doc_id",
             withinBatch: Boolean = false): DataFrame =
     StateStore.dedup(incoming, known, idCol, withinBatch)
@@ -233,6 +228,12 @@ object StateStore {
    * IS a broadcast hash anti-join). While state is small Catalyst/AQE picks
    * BroadcastHashJoin; at 10^12-scale state it degrades gracefully to a
    * shuffled hash/sort-merge anti-join on the id — no code change.
+   *
+   * The build side is the state's ids as stored, duplicates included (an
+   * id committed by two deltas): a left-anti join keeps a row iff no build
+   * row matches, so duplicates cannot change the result, and a `distinct`
+   * would only put an aggregate and a full-state shuffle under the
+   * broadcast.
    */
   def dedup(incoming: DataFrame, known: DataFrame, idCol: String = "doc_id",
             withinBatch: Boolean = false): DataFrame = {
@@ -243,6 +244,6 @@ object StateStore {
     // file batches) carry unique ids. Turn it on for sources that can
     // repeat ids within one batch.
     val in = if (withinBatch) incoming.dropDuplicates(idCol) else incoming
-    in.join(known.select(col("content_id").as(idCol)).distinct(), Seq(idCol), "left_anti")
+    in.join(known.select(col("content_id").as(idCol)), Seq(idCol), "left_anti")
   }
 }

@@ -44,11 +44,6 @@ object Windows {
         timestamp_seconds(col("window_end")).as("window_end"))
   }
 
-  /** Assign each record to its 24h tumbling collection window (ST3). */
-  def withWindow(df: DataFrame, tsCol: String): DataFrame =
-    df.withColumn("window_start",
-      window(to_timestamp(col(tsCol), "yyyy-MM-dd'T'HH:mm:ss"), "24 hours")("start"))
-
   /** Write a table partitioned by its 24h window date — the layout that
     * makes run-plan scans prune at the source (SURVEY.md §4.2: partition
     * pruning replaces the reference's per-window URL construction). */

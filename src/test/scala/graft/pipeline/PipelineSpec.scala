@@ -5,9 +5,13 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.format.Util
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
-class PipelineSpec extends SparkSuite {
+class PipelineSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   test("end-to-end run: counts reconcile and sinks are consistent") {
@@ -208,5 +212,102 @@ class PipelineSpec extends SparkSuite {
     def checksums(dir: String) =
       spark.read.parquet(s"$dir/checksums").as[(String, Long, Long)].collect().sorted
     assert(checksums(out) === checksums(clean))
+  }
+
+  /** A run's input: ids 0-2999 over four partitions, then one partition
+    * that the rules filter drops entirely (Audit.AzureActiveDirectory rows
+    * whose operation is not UserLoginFailed, from ids 3000-5999), then two
+    * malformed ids that quarantine. */
+  private def mixedInput(): DataFrame = {
+    val seqs = DataGen.sequences(spark, 6000L, 4)
+    val dropOnly = Parse.deriveFields(seqs.filter(col("doc_id") >= "doc-000000003000"))
+      .filter(col("content_type") === "Audit.AzureActiveDirectory" &&
+        col("operation") =!= "UserLoginFailed")
+      .select(seqs.columns.map(col): _*)
+      .coalesce(1)
+    val malformed = seqs.limit(1).withColumn("doc_id", lit("doc-7garbage1234"))
+      .unionByName(seqs.limit(1).withColumn("doc_id", lit("doc-nodigits-here")))
+    seqs.filter(col("doc_id") < "doc-000000003000").unionByName(dropOnly).unionByName(malformed)
+  }
+
+  test("observed per-partition metrics and RunStats equal the recomputed count-based ones") {
+    val out = tmpDir("pipe_observed")
+    val cfg = Pipeline.Config(duplicate = 2)
+    val input = mixedInput()
+    val store = new StateStore(s"$out/state")
+    store.commit(spark, DataGen.sequences(spark, 500L, 2).select("doc_id"), "doc_id",
+      cfg.expirationEpochSec, cfg.nowEpochSec)
+
+    // the per-partition metrics and stats as groupBy(__pid)/union/join and
+    // count jobs over the recomputed lineage, taken before the run commits
+    val fresh = StateStore.dedup(input, store.load(spark, cfg.nowEpochSec))
+    val inflated = fresh.withColumn("__dup", explode(array_repeat(lit(1), 2))).drop("__dup")
+    val parsed = Parse.deriveFields(inflated).withColumn("__pid", spark_partition_id())
+    val filtered = FilterStage.applyStatic(parsed, cfg.rules)
+    def perPartition(df: DataFrame, stage: String) =
+      df.groupBy(col("__pid").as("partition_id")).agg(count(lit(1)).as("rows"))
+        .select(lit(stage).as("stage"), col("partition_id"), col("rows"))
+    val parsedPerPart = perPartition(parsed, "parsed")
+    val filteredPerPart = perPartition(filtered, "filtered")
+    val droppedPerPart = parsedPerPart.select(col("partition_id"), col("rows").as("p_rows"))
+      .join(filteredPerPart.select(col("partition_id"), col("rows").as("f_rows")),
+        Seq("partition_id"), "left_outer")
+      .select(lit("dropped_by_filter").as("stage"), col("partition_id"),
+        (col("p_rows") - coalesce(col("f_rows"), lit(0L))).as("rows"))
+    val expected = perPartition(Route.routed(filtered), "routed")
+      .unionByName(filteredPerPart).unionByName(parsedPerPart).unionByName(droppedPerPart)
+      .unionByName(perPartition(Route.quarantined(filtered), "quarantined"))
+      .as[(String, Int, Long)].collect().sorted
+    val rowsIn = input.count()
+    val rowsFresh = fresh.count()
+    val rowsFiltered = filtered.count()
+    val rowsRouted = Route.routed(filtered).count()
+
+    // the input exercises every stage: dedup, filter drops, quarantine and
+    // a partition whose every row the filter drops
+    val stage = expected.groupBy(_._1).map { case (k, v) => k -> v.map(r => r._2 -> r._3).toMap }
+    assert(rowsIn - rowsFresh === 500L)
+    assert(stage("quarantined").values.sum === 4L)
+    val allDropped = stage("parsed").keySet -- stage("filtered").keySet
+    assert(allDropped.nonEmpty, s"no partition loses every row to the filter: $stage")
+    assert(allDropped.forall(p => stage("dropped_by_filter")(p) === stage("parsed")(p)))
+
+    val res = Pipeline.run(spark, input, out, cfg)
+    assert(spark.read.parquet(s"$out/metrics").as[(String, Int, Long)].collect().sorted === expected)
+    assert(res.stats === RunStats(
+      rowsIn = rowsIn,
+      rowsDeduped = rowsIn - rowsFresh,
+      rowsDroppedByFilter = rowsFresh * 2 - rowsFiltered,
+      rowsQuarantined = rowsFiltered - rowsRouted,
+      rowsRouted = rowsRouted))
+  }
+
+  test("one run with state scans its input in at most three plans") {
+    val dir = tmpDir("pipe_scans")
+    val inputDir = s"$dir/input"
+    DataGen.sequences(spark, 4000L, 4).write.parquet(inputDir)
+    val out = tmpDir("pipe_scans_out")
+    val cfg = Pipeline.Config()
+    new StateStore(s"$out/state").commit(spark, DataGen.sequences(spark, 1000L, 2).select("doc_id"),
+      "doc_id", cfg.expirationEpochSec, cfg.nowEpochSec)
+    val input = spark.read.parquet(inputDir)
+
+    val scanning = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit =
+        if (find(qe.executedPlan) {
+              case s: FileSourceScanExec => s.relation.location.rootPaths.exists(_.toString.contains(inputDir))
+              case _ => false
+            }.isDefined) scanning.add(funcName)
+      override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // listener delivery is async; give the bus time to drain (as ParSpec)
+    try { Pipeline.run(spark, input, out, cfg); Thread.sleep(1500) }
+    finally spark.listenerManager.unregister(listener)
+    // the materialisation, the state commit and the input count
+    assert(scanning.size <= 3, s"plans scanning the input: $scanning")
   }
 }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** Physical-plan hygiene: the properties that make the pipeline survive a
   * 100x scale-up — pushdown into the scan, column pruning, broadcast of
   * dimension tables, no unnecessary shuffles. */
-class PlanSpec extends SparkSuite {
+class PlanSpec extends SparkSuite
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
 
   val sf = "/root/testdata/sf0.01"
 
@@ -60,6 +61,27 @@ class PlanSpec extends SparkSuite {
     val plan = fresh.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
       s"plan:\n$plan")
+  }
+
+  test("dedup build side: no Exchange and no HashAggregate under the BroadcastExchange") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    val out = tmpDir("plan_state_build")
+    val st = new StateStore(s"$out/state")
+    import spark.implicits._
+    st.commit(spark, Seq("doc-1", "doc-2").toDF("doc_id"), "doc_id",
+      Parse.BaseEpoch + 9999, Parse.BaseEpoch)
+    st.commit(spark, Seq("doc-2", "doc-3").toDF("doc_id"), "doc_id",
+      Parse.BaseEpoch + 9999, Parse.BaseEpoch)
+    val plan = st.dedup(DataGen.sequences(spark, 1000L, 4), st.load(spark, Parse.BaseEpoch))
+      .queryExecution.executedPlan
+    val builds = collect(plan) { case b: BroadcastExchangeLike => b }
+    assert(builds.nonEmpty, s"no broadcast build side:\n$plan")
+    val under = builds.flatMap(_.collect {
+      case e: ShuffleExchangeLike => e
+      case a: BaseAggregateExec => a
+    })
+    assert(under.isEmpty, s"build side aggregates or shuffles:\n$plan")
   }
 
   test("minhash LSH: signatures computed before the band-bucket exchange") {

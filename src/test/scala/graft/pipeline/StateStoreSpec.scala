@@ -55,6 +55,20 @@ class StateStoreSpec extends SparkSuite {
     assert(fresh.as[String].collect().sorted === Array("c", "d"))
   }
 
+  test("dedup: an id committed by two deltas removes exactly its incoming rows") {
+    val st = new StateStore(tmpDir("st_twice"))
+    st.commit(spark, Seq("a", "b").toDF("doc_id"), "doc_id", future, now)
+    st.merge(spark, Seq("a").toDF("doc_id"), "doc_id", future + 60, now + 60)
+    val known = st.load(spark, now)
+    assert(known.filter(col("content_id") === "a").count() === 2)
+    val incoming = Seq("a", "a", "c", "c", "d").toDF("doc_id")
+    val fresh = st.dedup(incoming, known).as[String].collect().sorted
+    assert(fresh === Array("c", "c", "d"))
+    val reference = incoming.join(known.select(col("content_id").as("doc_id")).distinct(),
+      Seq("doc_id"), "left_anti").as[String].collect().sorted
+    assert(fresh === reference)
+  }
+
   test("expired known ids are re-admitted (expiry-reload path)") {
     val st = new StateStore(tmpDir("st"))
     st.commit(spark, Seq("a").toDF("doc_id"), "doc_id", expirationEpochSec = past,
