@@ -69,9 +69,11 @@ object GraftSession {
       // over a columnar routed cache across two contention epochs: raw won
       // 4/6, best 6.21 s vs 7.39 s): the dominant column of the routed
       // records is the near-random token array, where the columnar
-      // encoders spend their time to save almost nothing. It applies to
-      // every columnar persist (e.g. the streaming micro-batch's routed
-      // set). Trade-off: a larger in-memory cache — flip back on when
+      // encoders spend their time to save almost nothing. No pipeline path
+      // persists columnar data any more (batch runs and micro-batches
+      // materialise with a localCheckpoint); the setting now serves the
+      // operator persists: the IVF `homed` sets, the DedupOps pairs and
+      // Bench. Trade-off: a larger in-memory cache — flip back on when
       // cache memory (not build CPU) is the constraint.
       .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
       // oracle parity + deterministic goldens

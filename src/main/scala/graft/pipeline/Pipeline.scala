@@ -72,8 +72,8 @@ object Pipeline {
     Route.routed(subscribedAndFiltered(Parse.deriveFields(sequences), rules, enabledTypes))
 
   /** Subscribe → rules filter over parsed records: the one definition
-    * `routedRecords` and `run` share (`run` stamps `__pid` on `parsed`
-    * first). */
+    * `routedRecords` and `processBatch` share (`processBatch` stamps
+    * `__pid` on `parsed` first). */
   private def subscribedAndFiltered(parsed: DataFrame, rules: Seq[RoutingRule],
                                     enabledTypes: Seq[String]): DataFrame = {
     val subscribed =
@@ -82,47 +82,91 @@ object Pipeline {
     FilterStage.applyStatic(subscribed, rules)
   }
 
+  /** Dedup: the rows of `in` whose ids the state has not seen, each id
+    * once — what the state commits. Shared by `processBatch` and the
+    * streaming replay guard. */
+  private[graft] def unseen(spark: SparkSession, in: DataFrame, backend: StateBackend,
+                            cfg: Config): DataFrame =
+    if (cfg.skipKnownLogs)
+      StateStore.dedup(in, backend.load(spark, cfg.nowEpochSec), withinBatch = cfg.dedupWithinRun)
+    else if (cfg.dedupWithinRun) in.dropDuplicates("doc_id")
+    else in
+
   /**
-   * Dedup → `duplicate` inflation, shared by `run` and the streaming
-   * micro-batch. Returns `(fresh, inflated)`: `fresh` holds each new id
-   * once and is what the state commits; `inflated` is what the transform
-   * processes.
+   * Full run: read → dedup → parse → filter → route → write sinks →
+   * commit state, every output at `<outDir>/<name>`.
    */
-  private[graft] def freshAndInflated(spark: SparkSession, in: DataFrame,
-                                      backend: StateBackend,
-                                      cfg: Config): (DataFrame, DataFrame) = {
-    val fresh =
-      if (cfg.skipKnownLogs)
-        StateStore.dedup(in, backend.load(spark, cfg.nowEpochSec),
-          withinBatch = cfg.dedupWithinRun)
-      else if (cfg.dedupWithinRun) in.dropDuplicates("doc_id")
-      else in
+  def run(spark: SparkSession, sequences: DataFrame, outDir: String,
+          cfg: Config = Config()): Result = {
+    val backend = stateBackend(cfg, outDir)
+    val stats = processBatch(spark, sequences, backend, cfg,
+      recordSinks(outDir, cfg), name => s"$outDir/$name")
+    Result(stats, backend.currentVersion)
+  }
+
+  /** The known-content state of a run writing to `outDir`: the Config's
+    * backend, else the snapshot-delta StateStore at `<outDir>/state`. */
+  private[graft] def stateBackend(cfg: Config, outDir: String): StateBackend =
+    cfg.stateBackend.getOrElse(new SnapshotStateBackend(new StateStore(s"$outDir/state")))
+
+  /** The routed set as a record sink sees it: `cached` is the materialised
+    * frame, `sized` the same rows coalesced to the output-file target (see
+    * `targetRowsPerFile`). */
+  private[graft] final case class Routed(cached: DataFrame, sized: DataFrame)
+
+  /** The record sinks of a batch run, each at `<outDir>/<name>`: every
+    * sink shape by default, else only the interfaces `cfg.output` enables. */
+  private def recordSinks(outDir: String, cfg: Config): Seq[Routed => Unit] = {
+    def salted(r: Routed) = Route.saltedForWrite(r.cached, cfg.saltBuckets)
+    def graylog(r: Routed): Unit =
+      Sinks.write(Sinks.graylogShape(r.sized), s"$outDir/graylog")
+    def fluentd(tenant: String)(r: Routed): Unit =
+      Sinks.write(Sinks.fluentdShape(r.sized, tenant), s"$outDir/fluentd")
+    def logAnalytics(r: Routed): Unit =
+      Sinks.write(Sinks.logAnalyticsShape(r.sized), s"$outDir/log_analytics", Seq("log_type"))
+    cfg.output match {
+      case None => Seq( // engine default: all sink shapes
+        r => Sinks.write(Sinks.fileCsvShape(salted(r)), s"$outDir/file_csv", Seq("content_type")),
+        graylog, fluentd(cfg.tenant), logAnalytics)
+      case Some(out) => // reference semantics: only enabled interfaces
+        out.file.filter(_.enabled).toSeq.map { f => (r: Routed) =>
+          if (f.separateByContentType)
+            { CsvSink.writeSeparated(r.cached, s"$outDir/${f.path}", f.separator); () }
+          else CsvSink.writeUnified(salted(r), s"$outDir/${f.path}", f.separator)
+        } ++
+        out.graylog.filter(_.enabled).map(_ => graylog _) ++
+        out.fluentd.filter(_.enabled).map(f => fluentd(f.tenantName) _) ++
+        out.azureLogAnalytics.filter(_.enabled).map(_ => logAnalytics _)
+    }
+  }
+
+  /**
+   * One collection pass over `in`, the body of `run` and of every
+   * streaming micro-batch — the reference's cache flush
+   * (src/collector.rs:161-226): dedup → parse → filter → route, materialise
+   * once, fan out to `recordSinks` plus the operational outputs (prtg,
+   * checksums, quarantine, metrics, each at `outputPath(name)`), then
+   * commit state. The one materialising pass observes every count the pass
+   * reports (input rows; rows parsed, routed and quarantined per emitting
+   * partition), so the `metrics` sink and the stats cost no extra job; only
+   * the state commit reads the input again.
+   */
+  private[graft] def processBatch(spark: SparkSession, in: DataFrame, backend: StateBackend,
+                                  cfg: Config, recordSinks: Seq[Routed => Unit],
+                                  outputPath: String => String): RunStats = {
+    // The input count is observed on this pass's own plan, so only the
+    // materialising action fills it (a `limit`-style action on an observed
+    // plan that ran first would fill it with a partial count).
+    val inSeen = new Observation()
+    val fresh = unseen(spark, in.observe(inSeen, count(lit(1)).as("rows")), backend, cfg)
     // Row multiplier for load testing (reference `duplicate`,
     // src/api_connection.rs:356-368) — applied AFTER dedup, like the
     // reference (known check precedes the duplicate enqueue), and only to
     // the processing branch (state still commits each id once).
     val inflated =
       if (cfg.duplicate > 1)
-        fresh.withColumn("__dup", explode(array_repeat(lit(1), cfg.duplicate)))
-          .drop("__dup")
+        fresh.withColumn("__dup", explode(array_repeat(lit(1), cfg.duplicate))).drop("__dup")
       else fresh
-    (fresh, inflated)
-  }
-
-  /**
-   * Full run: read → dedup → parse → filter → route → write sinks →
-   * commit state. The one materialising pass observes every count the run
-   * reports (rows parsed, routed and quarantined per emitting partition),
-   * so the `metrics` sink and the per-stage counts cost no extra job; only
-   * the input count and the state commit read the input again.
-   */
-  def run(spark: SparkSession, sequences: DataFrame, outDir: String,
-          cfg: Config = Config()): Result = {
-
-    val backend = cfg.stateBackend.getOrElse(
-      new SnapshotStateBackend(new StateStore(s"$outDir/state")))
-
-    val (fresh, inflated) = freshAndInflated(spark, sequences, backend, cfg)
 
     // Stamp the emitting task's partition id BEFORE the filter so the
     // parsed/filtered/dropped per-partition metrics share one lineage
@@ -154,6 +198,7 @@ object Pipeline {
     // overwrite contract, so a re-run is safe.
     val filteredCached = filtered.localCheckpoint(eager = true)
     try {
+      val rowsIn = inSeen.get("rows").asInstanceOf[Long]
       val parsedPerPart = observedCounts(parsedSeen, "parsed")
       val routedPerPart = observedCounts(filteredSeen, "routed")
       val quarantinedPerPart = observedCounts(filteredSeen, "quarantined")
@@ -188,13 +233,12 @@ object Pipeline {
             math.max(1L, (n + 999) / 1000)).toInt
           df.coalesce(math.max(p, floor))
         }
-      def sized(df: DataFrame) = sizedBy(df, routedCount)
+      val routed = Routed(cached, sizedBy(cached, routedCount))
       // quarantine sized from ITS OWN count (usually ≈0; sizing it from the
       // routed count writes near-empty files when rules are lax and
       // oversized ones when they are strict)
       val quarantineSized = sizedBy(quarantine, quarantinedCount)
 
-      val salted = Route.saltedForWrite(cached, cfg.saltBuckets)
       // Per-partition lineage metrics (north rule): rows parsed / routed /
       // quarantined per emitting task, plus dropped-by-filter for every
       // parsed partition — all keyed on the __pid stamped before the
@@ -209,32 +253,13 @@ object Pipeline {
          stageRows("dropped_by_filter", parsedPerPart.map { case (p, n) =>
            p -> (n - filteredPerPart.getOrElse(p, 0L)) }) ++
          stageRows("quarantined", quarantinedPerPart)): _*), Schemas.metrics)
-      val recordSinks: Seq[() => Unit] = cfg.output match {
-        case None => Seq( // engine default: all sink shapes
-          () => Sinks.write(Sinks.fileCsvShape(salted), s"$outDir/file_csv", Seq("content_type")),
-          () => Sinks.write(Sinks.graylogShape(sized(cached)), s"$outDir/graylog"),
-          () => Sinks.write(Sinks.fluentdShape(sized(cached), cfg.tenant), s"$outDir/fluentd"),
-          () => Sinks.write(Sinks.logAnalyticsShape(sized(cached)), s"$outDir/log_analytics", Seq("log_type")))
-        case Some(out) => // reference semantics: only enabled interfaces
-          out.file.filter(_.enabled).map { f => () =>
-            if (f.separateByContentType)
-              { CsvSink.writeSeparated(cached, s"$outDir/${f.path}", f.separator); () }
-            else CsvSink.writeUnified(salted, s"$outDir/${f.path}", f.separator)
-          }.toSeq ++
-          out.graylog.filter(_.enabled).map(_ => () =>
-            Sinks.write(Sinks.graylogShape(sized(cached)), s"$outDir/graylog")) ++
-          out.fluentd.filter(_.enabled).map(f => () =>
-            Sinks.write(Sinks.fluentdShape(sized(cached), f.tenantName), s"$outDir/fluentd")) ++
-          out.azureLogAnalytics.filter(_.enabled).map(_ => () =>
-            Sinks.write(Sinks.logAnalyticsShape(sized(cached)), s"$outDir/log_analytics", Seq("log_type")))
-      }
       // operational outputs: the aggregates are a handful of rows — one
       // file each, not one per shuffle partition
-      Sinks.fanOut(recordSinks ++ Seq(
-        () => Sinks.write(Sinks.prtgShape(cached).coalesce(1), s"$outDir/prtg"),
-        () => Sinks.write(Sinks.routedChecksum(cached).coalesce(1), s"$outDir/checksums"),
-        () => Sinks.write(quarantineSized, s"$outDir/quarantine"),
-        () => Sinks.write(partMetrics.coalesce(1), s"$outDir/metrics")))
+      Sinks.fanOut(recordSinks.map(sink => () => sink(routed)) ++ Seq(
+        () => Sinks.write(Sinks.prtgShape(cached).coalesce(1), outputPath("prtg")),
+        () => Sinks.write(Sinks.routedChecksum(cached).coalesce(1), outputPath("checksums")),
+        () => Sinks.write(quarantineSized, outputPath("quarantine")),
+        () => Sinks.write(partMetrics.coalesce(1), outputPath("metrics"))))
 
       // State commit strictly AFTER all sink writes (resume contract).
       // The reference marks every RECEIVED blob known, including rows the
@@ -246,20 +271,16 @@ object Pipeline {
         cfg.expirationEpochSec, cfg.nowEpochSec)
 
       // Stats (the reference's RunStatistics, A1/A4): the committed count
-      // is the snapshot's footer count (backend.commit returns it), the
-      // input count one scan, and the rest was observed by the
-      // materialising pass.
-      val rowsIn = sequences.count()
-      val rowsFiltered = routedCount + quarantinedCount
-      val stats = RunStats(
+      // is the snapshot's footer count (backend.commit returns it), and the
+      // rest was observed by the materialising pass.
+      RunStats(
         rowsIn = rowsIn,
         rowsDeduped = rowsIn - rowsFresh,
         // dropped-by-filter includes rows of non-subscribed content types
         // (reference: unsubscribed feeds are never fetched at all)
-        rowsDroppedByFilter = rowsFresh * cfg.duplicate - rowsFiltered,
+        rowsDroppedByFilter = rowsFresh * cfg.duplicate - routedCount - quarantinedCount,
         rowsQuarantined = quarantinedCount,
         rowsRouted = routedCount)
-      Result(stats, backend.currentVersion)
     } finally {
       // deterministic release (the ContextCleaner would otherwise wait for
       // GC): safe because fanOut has settled every sink job and no stat

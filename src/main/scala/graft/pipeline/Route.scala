@@ -46,25 +46,4 @@ object Route {
     df.withColumn("__salt", pmod(xxhash64(col("doc_id")), lit(saltBuckets)).cast("int"))
       .repartition(col("content_type"), col("__salt"))
       .drop("__salt")
-
-  /**
-   * Salted equi-join for a skewed key (north rule J7): the fact side gets a
-   * random-ish salt in [0, salts); the dimension side is replicated `salts`
-   * times; the join key becomes (key, salt), splitting each hot key's
-   * shuffle partition into `salts` tasks. AQE's skew-join split handles
-   * sort-merge skew adaptively, but salting is the deterministic fix that
-   * also works for joins AQE can't split (e.g. under bucketed layouts) —
-   * and the pattern the north rule names explicitly.
-   */
-  def saltedJoin(fact: DataFrame, dim: DataFrame, key: String, salts: Int,
-                 saltSource: Option[Column] = None): DataFrame = {
-    // salt from a caller-supplied expression, or a hash of every non-key
-    // fact column (deterministic, no schema assumption)
-    val src = saltSource.getOrElse(
-      xxhash64(fact.columns.filterNot(_ == key).map(col): _*))
-    val saltedFact = fact.withColumn("__salt", pmod(src, lit(salts)).cast("int"))
-    val saltedDim = dim
-      .withColumn("__salt", explode(array((0 until salts).map(lit): _*)))
-    saltedFact.join(saltedDim, Seq(key, "__salt")).drop("__salt")
-  }
 }

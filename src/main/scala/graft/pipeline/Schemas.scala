@@ -69,9 +69,6 @@ object Schemas {
     StructField("rows", LongType, nullable = false)))
 }
 
-/** Typed row of the primary input table. */
-case class SequenceRow(doc_id: String, tokens: Array[Int], n_tok: Int, source: String)
-
 /** One routing/filter rule: for records of `content_type`, a record that HAS
   * key `key` must have value `value` to pass; records missing the key pass
   * (reference: src/collector.rs:176-184 — the absent-key-passes rule). */

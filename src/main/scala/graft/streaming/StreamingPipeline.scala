@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.pipeline._
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /**
  * Structured Streaming face of the pipeline (SURVEY.md §2.8).
@@ -15,11 +16,15 @@ import graft.pipeline._
  *  - `readStream.parquet` over the sequences directory is the unbounded
  *    source (new files = new micro-batches; at scale this is a streaming
  *    table read / Kafka topic).
- *  - `foreachBatch` runs the SAME batch core per micro-batch: anti-join
- *    dedup vs the snapshot state store, parse, filter, route, append to
- *    sinks, then commit state — so batch and streaming share one code path
- *    and one exactly-once contract (state committed after the sink write;
- *    re-delivery absorbed by the anti-join, ST4).
+ *  - `foreachBatch` runs the SAME batch core per micro-batch
+ *    (`Pipeline.processBatch`): anti-join dedup vs the state backend, parse,
+ *    filter, route, one materialisation, the sink fan-out, then the state
+ *    commit — so batch and streaming share one code path and one
+ *    exactly-once contract (state committed after every sink write;
+ *    re-delivery absorbed by the anti-join, ST4). Micro-batch N writes
+ *    `routed/batch_id=N` (plus the optional `transport`),
+ *    `prtg_batches/batch_id=N`, and `quarantine/`, `checksums/` and
+ *    `metrics/` each under `batch_id=N`.
  *  - `Trigger.AvailableNow` drains everything available and stops — the
  *    reference's bounded "collect run" semantics with resumability.
  *  - `maxFilesPerTrigger` bounds micro-batch size (the cacheSize analog,
@@ -27,33 +32,33 @@ import graft.pipeline._
  */
 object StreamingPipeline {
 
-  /** Run one AvailableNow drain over `inputDir`. Returns rows routed.
+  /** Run one AvailableNow drain over `inputDir`. Returns rows routed, the
+    * sum of each micro-batch's `RunStats.rowsRouted`.
     *
     * `transport`, when set, emits each micro-batch's routed rows over a
-    * byte-level sink (e.g. `Transport.sendGraylogTcp`) inside the
-    * marker-guarded block — so a fully-committed batch is never re-sent on
-    * restart. Delivery is at-least-once at the wire (a crash between the
-    * socket emit and the marker re-sends that one batch — exactly the
-    * reference's retry behavior; its Graylog input has no dedup either),
-    * while the FILE outputs stay exactly-once via the marker protocol. */
+    * byte-level sink (e.g. `Transport.sendGraylogTcp`) as one more record
+    * sink of the core, so a failed send fails the batch before its state
+    * commit and a fully-committed batch is never re-sent on restart.
+    * Delivery is at-least-once at the wire (a crash between the socket emit
+    * and the marker re-sends that one batch — exactly the reference's retry
+    * behavior; its Graylog input has no dedup either), while the FILE
+    * outputs stay exactly-once via the marker protocol. */
   def runAvailableNow(spark: SparkSession, inputDir: String, outDir: String,
                       cfg: Pipeline.Config = Pipeline.Config(),
                       maxFilesPerTrigger: Int = 4,
                       transport: Option[DataFrame => Long] = None): Long = {
-    // same state seam as batch Pipeline.run: snapshot store by default, a
-    // catalog table (or anything else) when the Config says so — the
+    // the same state as batch Pipeline.run over the same Config: the
     // batch/streaming halves of a deployment must share ONE state or every
     // streamed id re-emits as fresh in the batch path
-    val backend = cfg.stateBackend.getOrElse(
-      new SnapshotStateBackend(new StateStore(s"$outDir/state")))
+    val backend = Pipeline.stateBackend(cfg, outDir)
     val routedTotal = new java.util.concurrent.atomic.AtomicLong(0)
+    val markerDir = Paths.get(s"$outDir/_batches")
 
-    val stream = spark.readStream
+    val q = spark.readStream
       .schema(Schemas.sequences)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(inputDir)
-
-    val q = stream.writeStream
+      .writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -66,38 +71,28 @@ object StreamingPipeline {
         //    absorbs the whole batch: the crash hit between state commit
         //    and marker — the previous outputs are complete; overwriting
         //    them with the now-empty `fresh` would DELETE them. Keep them.
+        //    Only a replay evaluates `fresh`, on a plan of its own: the
+        //    core's observed input count must be filled by the core alone.
         //  - otherwise: (re)write; mode("overwrite") makes partial-write
         //    retries idempotent.
-        val markerDir = java.nio.file.Paths.get(s"$outDir/_batches")
         val marker = markerDir.resolve(s"batch-$batchId")
-        val batchDir = java.nio.file.Paths.get(s"$outDir/routed/batch_id=$batchId")
-        if (!java.nio.file.Files.exists(marker)) {
-          val (fresh, inflated) = Pipeline.freshAndInflated(spark, batch, backend, cfg)
-          val replayAfterStateCommit =
-            java.nio.file.Files.exists(batchDir) && fresh.isEmpty
+        val batchDir = s"$outDir/routed/batch_id=$batchId"
+        if (!Files.exists(marker)) {
+          val replayAfterStateCommit = Files.exists(Paths.get(batchDir)) &&
+            Pipeline.unseen(spark, batch, backend, cfg).isEmpty
           if (!replayAfterStateCommit) {
-            val routed = Pipeline.routedRecords(inflated, cfg.rules, cfg.enabledTypes)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              Sinks.write(routed, batchDir.toString)
-              Sinks.write(Sinks.prtgShape(routed), s"$outDir/prtg_batches/batch_id=$batchId")
-              transport.foreach(send => send(routed))
-              routedTotal.addAndGet(routed.count())
-              // commit all received ids (filtered rows included — reference
-              // semantics, src/collector.rs:161) strictly after the writes
-              backend.commit(spark, fresh.select("doc_id"), "doc_id",
-                cfg.expirationEpochSec, cfg.nowEpochSec)
-              ()
-            } finally routed.unpersist()
+            val recordSinks = ((r: Pipeline.Routed) => Sinks.write(r.cached, batchDir)) +:
+              transport.toSeq.map(send => (r: Pipeline.Routed) => { send(r.cached); () })
+            routedTotal.addAndGet(Pipeline.processBatch(spark, batch, backend, cfg, recordSinks, {
+              case "prtg" => s"$outDir/prtg_batches/batch_id=$batchId"
+              case name => s"$outDir/$name/batch_id=$batchId"
+            }).rowsRouted)
           }
           // durable batch-completion marker (atomic create-and-move, like
           // the state pointer swap)
-          java.nio.file.Files.createDirectories(markerDir)
-          val tmp = markerDir.resolve(s"batch-$batchId.tmp")
-          java.nio.file.Files.write(tmp, Array.emptyByteArray)
-          java.nio.file.Files.move(tmp, marker,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          Files.createDirectories(markerDir)
+          Files.move(Files.write(markerDir.resolve(s"batch-$batchId.tmp"), Array.emptyByteArray),
+            marker, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
         }
         ()
       }
@@ -166,81 +161,6 @@ object StreamingPipeline {
       .option("checkpointLocation", s"$outDir/_checkpoint_sess")
       .format("parquet")
       .option("path", s"$outDir/sessions")
-      .start()
-    q.awaitTermination()
-  }
-
-  /**
-   * Custom stateful dedup with TTL via flatMapGroupsWithState — the exact
-   * `known_blobs` semantics (id → expiration; expired ids re-admitted,
-   * src/config.rs:92-106) expressed in Spark's keyed state API. Each key
-   * (doc_id) keeps one expiration; a row is emitted only when no live
-   * state exists; the state times out after `ttl`, after which the id is
-   * re-admitted (the reference's load-time expiry filter).
-   */
-  def statefulDedup(sequences: org.apache.spark.sql.Dataset[SequenceRow],
-                    ttlMillis: Long = 30L * 24 * 3600 * 1000)
-      : org.apache.spark.sql.Dataset[SequenceRow] = {
-    import sequences.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    sequences
-      .groupByKey(_.doc_id)
-      .flatMapGroupsWithState[Long, SequenceRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        // state value = expiration epoch-millis, checked on access — the
-        // reference's load-time expiry (src/config.rs:92-106). NoTimeout:
-        // ProcessingTimeTimeout keeps an AvailableNow drain alive waiting
-        // for wall-clock timeouts; expired entries are instead overwritten
-        // in place on re-arrival. (Production long-running streams would
-        // add EventTimeTimeout + watermark to also GC the state.)
-        (_: String, rows: Iterator[SequenceRow], state: GroupState[Long]) =>
-          val now = state.getCurrentProcessingTimeMs()
-          if (state.exists && state.get > now) {
-            Iterator.empty // known and unexpired → dedup
-          } else {
-            val first = if (rows.hasNext) Iterator.single(rows.next()) else Iterator.empty
-            state.update(now + ttlMillis)
-            first
-          }
-      }
-  }
-
-  /** Drain `inputDir` through the flatMapGroupsWithState dedup, writing
-    * survivors to `outDir/deduped`. */
-  def runStatefulDedup(spark: SparkSession, inputDir: String, outDir: String): Unit = {
-    import spark.implicits._
-    val in = spark.readStream.schema(Schemas.sequences).parquet(inputDir)
-      .as[SequenceRow]
-    val q = statefulDedup(in).writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$outDir/_checkpoint_fmgs")
-      .format("parquet")
-      .option("path", s"$outDir/deduped")
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Streaming-native dedup alternative (ST2): drop duplicate doc_ids
-    * within the watermark horizon using Spark's built-in streaming state —
-    * demonstrates the `dropDuplicatesWithinWatermark` path where the
-    * snapshot state store is not wanted. */
-  def streamingDedupCounts(spark: SparkSession, inputDir: String, outDir: String): Unit = {
-    val parsed = Parse.deriveFields(
-      spark.readStream.schema(Schemas.sequences).parquet(inputDir))
-      .withColumn("event_time",
-        to_timestamp(col("CreationTime"), "yyyy-MM-dd'T'HH:mm:ss"))
-      .withWatermark("event_time", "168 hours")
-      .dropDuplicatesWithinWatermark("doc_id")
-    val q = parsed
-      .groupBy(col("content_type"))
-      .agg(count(lit(1)).as("cnt"))
-      .writeStream
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$outDir/_checkpoint_dd")
-      .format("memory")
-      .queryName("dedup_counts")
       .start()
     q.awaitTermination()
   }

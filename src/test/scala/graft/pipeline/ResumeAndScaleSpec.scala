@@ -44,40 +44,6 @@ class ResumeAndScaleSpec extends SparkSuite {
     assert(files >= 3, s"dominant type written by only $files task(s) — salt not effective")
   }
 
-  test("salted join ≡ plain join, with the hot key split across salt buckets") {
-    val fact = Pipeline.routedRecords(DataGen.sequences(spark, 5000L, 4),
-      DataGen.routingRules)
-    val dim = Seq(
-      ("Audit.General", "general-handler"),
-      ("Audit.AzureActiveDirectory", "aad-handler"),
-      ("Audit.Exchange", "exchange-handler"),
-      ("Audit.SharePoint", "sp-handler"),
-      ("DLP.All", "dlp-handler")).toDF("content_type", "handler")
-    val plain = fact.join(dim, "content_type")
-    val salted = Route.saltedJoin(fact, dim, "content_type", salts = 8)
-    assert(salted.count() === plain.count())
-    val a = plain.select("doc_id", "handler")
-    val b = salted.select("doc_id", "handler")
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-    // the salted join key actually splits each hot key: the JOIN's physical
-    // plan must key its exchanges/join on (content_type, __salt) — an
-    // assertion on the operator itself, not on an independently recomputed
-    // salt expression (which would pass even if saltedJoin regressed)
-    val plan = Route.saltedJoin(fact, dim, "content_type", salts = 8)
-      .queryExecution.executedPlan.toString
-    assert(plan.matches("(?s).*Join \\[content_type#\\d+, __salt#\\d+\\].*"),
-      s"join must be keyed on (content_type, __salt):\n$plan")
-    // and with a caller-supplied salt source, the dominant type's rows
-    // spread over all 8 buckets in the JOINED output (salt kept observable
-    // by re-deriving it from the same source expression the join used)
-    val src = pmod(xxhash64(col("doc_id")), lit(8)).cast("int")
-    val salted2 = Route.saltedJoin(fact, dim, "content_type", salts = 8,
-      saltSource = Some(xxhash64(col("doc_id"))))
-    val domSalts = salted2.filter(col("content_type") === "Audit.General")
-      .withColumn("__s", src).select("__s").distinct().count()
-    assert(domSalts === 8L)
-  }
-
   test("window-partitioned layout prunes the scan to requested windows") {
     val out = tmpDir("winpart")
     val parsed = Parse.deriveFields(DataGen.sequences(spark, 3000L, 4))

@@ -2,7 +2,9 @@ package graft.streaming
 
 import graft.SparkSuite
 import graft.pipeline._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 class StreamingPipelineSpec extends SparkSuite {
   import spark.implicits._
@@ -184,28 +186,64 @@ class StreamingPipelineSpec extends SparkSuite {
       "closed streaming sessions must equal the batch session set")
   }
 
-  test("flatMapGroupsWithState dedup: duplicates within and across batches collapse") {
-    val in = tmpDir("stream_in5"); val out = tmpDir("stream_out5")
-    writeBatch(in, 0, 600)
-    writeBatch(in, 0, 600)   // duplicate file → cross-batch duplicates
-    StreamingPipeline.runStatefulDedup(spark, in, out)
-    val got = spark.read.parquet(s"$out/deduped")
-    assert(got.count() === 600L)
-    assert(got.select("doc_id").distinct().count() === 600L)
-    // second drain over one more overlapping file: only new ids survive
-    writeBatch(in, 300, 900)
-    StreamingPipeline.runStatefulDedup(spark, in, out)
-    val after = spark.read.parquet(s"$out/deduped")
-    assert(after.count() === 900L)
-    assert(after.select("doc_id").distinct().count() === 900L)
+  test("micro-batches quarantine rows with no known content type, as the batch path does") {
+    val in = tmpDir("stream_quar_in"); val out = tmpDir("stream_quar_out")
+    writeBatch(in, 0, 400)
+    // malformed ids derive a NULL content type, so no bucket routes them
+    val good = DataGen.sequences(spark, 1L, 1)
+    val bogus = Seq("doc-7garbage1234", "doc-nodigits-here")
+    bogus.map(id => good.withColumn("doc_id", lit(id))).reduce(_ unionByName _)
+      .write.mode("append").parquet(in)
+    val routedN = StreamingPipeline.runAvailableNow(spark, in, out, maxFilesPerTrigger = 1)
+    val quarantine = spark.read.parquet(s"$out/quarantine")
+    assert(quarantine.select("doc_id").as[String].collect().sorted === bogus.sorted)
+    assert(quarantine.filter(col("content_type").isNotNull).count() === 0)
+    val routed = spark.read.parquet(s"$out/routed")
+    assert(routed.filter(col("doc_id").isin(bogus: _*)).count() === 0, "routed leaked")
+    assert(routedN === Pipeline.routedRecords(DataGen.sequences(spark, 400L, 2),
+      DataGen.routingRules).count())
   }
 
-  test("dropDuplicatesWithinWatermark dedups a doubled stream") {
-    val in = tmpDir("stream_in4"); val out = tmpDir("stream_out4")
-    writeBatch(in, 0, 800)
-    writeBatch(in, 0, 800) // duplicate file
-    StreamingPipeline.streamingDedupCounts(spark, in, out)
-    val got = spark.table("dedup_counts").agg(sum("cnt")).as[Long].head()
-    assert(got === 800L)
+  test("a transport that throws fails its micro-batch before the marker and the state " +
+       "commit; the next drain's outputs equal a clean drain's") {
+    val in = tmpDir("stream_fail_in")
+    writeBatch(in, 0, 300); writeBatch(in, 300, 600); writeBatch(in, 600, 900)
+    val sends = new java.util.concurrent.atomic.AtomicInteger(0)
+    val working: DataFrame => Long = _.count()
+    val failsOnBatch1: DataFrame => Long = df =>
+      if (sends.getAndIncrement() == 1) throw new java.io.IOException("transport down")
+      else working(df)
+
+    val out = tmpDir("stream_fail_out")
+    val err = intercept[StreamingQueryException] {
+      StreamingPipeline.runAvailableNow(spark, in, out, maxFilesPerTrigger = 1,
+        transport = Some(failsOnBatch1))
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == "transport down"), s"unexpected failure: $err")
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out/_batches/batch-0")))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out/_batches/batch-1")),
+      "the failed batch must get no marker")
+    val store = new StateStore(s"$out/state")
+    assert(store.currentSnapshot === Some(0), "the failed batch must commit no state")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(store.snapshotPath(1))))
+
+    StreamingPipeline.runAvailableNow(spark, in, out, maxFilesPerTrigger = 1,
+      transport = Some(working))
+    val clean = tmpDir("stream_fail_clean")
+    StreamingPipeline.runAvailableNow(spark, in, clean, maxFilesPerTrigger = 1,
+      transport = Some(working))
+    def same(a: DataFrame, b: DataFrame): Boolean =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    def routed(dir: String) =
+      spark.read.parquet(s"$dir/routed").select("batch_id", "doc_id", "tokens")
+    def checksums(dir: String) = spark.read.parquet(s"$dir/checksums")
+    def committed(dir: String) =
+      new StateStore(s"$dir/state").load(spark, Pipeline.Config().nowEpochSec).select("content_id")
+    assert(routed(out).count() > 0)
+    assert(same(routed(out), routed(clean)), "routed differs from a clean drain")
+    assert(same(checksums(out), checksums(clean)), "checksums differ from a clean drain")
+    assert(committed(out).count() === 900)
+    assert(same(committed(out), committed(clean)), "committed ids differ from a clean drain")
   }
 }
