@@ -261,12 +261,11 @@ object Bench {
         .write.mode("overwrite").parquet(stateDir)
       def knownDf = spark.read.parquet(stateDir)
       def incoming = DataGen.sequences(spark, inN, cpus * 2)
-      val st = new StateStore("bench-dedup-state-never-touched")
       // untimed warm scan of the state parquet first, so the timing
       // measures the join, not a cold page cache
       knownDf.count()
       queries("dedup_large_state_plain") = time2 {
-        st.dedup(incoming, knownDf).count()
+        StateStore.dedup(incoming, knownDf).count()
       }
     }
 

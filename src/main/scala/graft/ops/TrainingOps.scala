@@ -182,19 +182,11 @@ object TrainingOps {
    * Symmetric int8 quantization of an embedding column — the storage/
    * serving compression step after embedding generation. Codegen'd kernel
    * (one pass for max|x|, one for the quantized values); the HOF reference
-   * formulation is pinned in FunctionsSpec and reproduced by the DuckDB
+   * formulation is pinned in TrainingOpsSpec and reproduced by the DuckDB
    * oracle (pure IEEE-double arithmetic, mult before div).
    */
   def quantizeInt8(df: DataFrame, vecCol: String, outCol: String = "q"): DataFrame =
     df.withColumn(outCol, graft.functions.GraftFunctions.quantize_i8(col(vecCol)))
-
-  /** HOF reference formulation of quantizeInt8 (semantic spec). */
-  def quantizeInt8Ref(vec: Column): Column = {
-    val maxAbs = array_max(transform(vec, x => abs(x.cast("double"))))
-    when(maxAbs > 0,
-      transform(vec, x => floor(x.cast("double") * 127.0 / maxAbs).cast("int")))
-      .otherwise(transform(vec, _ => lit(0)))
-  }
 
   /**
    * Test-set decontamination (the GPT-3 appendix-C approach): flag corpus

@@ -18,13 +18,9 @@ object Monitor {
     when(length(c) <= keep, c).otherwise(
       concat(repeat(lit("*"), 8), c.substr(length(c) - lit(keep - 1), lit(keep))))
 
-  /** A6 — progress percent. The reference's formula
-    * `((found - successful) / found) * 100` INT-divides first (usize
-    * division truncates: 0 whenever successful > 0, 100 only at
-    * successful = 0) and computes *remaining*, not progress (:862-867) —
-    * reproduced verbatim, bug included, plus the corrected form. */
-  def progressPctReference(found: Column, successful: Column): Column =
-    (floor((found - successful) / found) * 100).cast("int")
+  /** A6 — progress percent: successful / found, rounded. The reference's
+    * formula (:862-867) int-divides first and computes *remaining*, not
+    * progress; its verbatim form is the oracle in MonitorSpec. */
   def progressPct(found: Column, successful: Column): Column =
     round(successful * 100.0 / found).cast("int")
 

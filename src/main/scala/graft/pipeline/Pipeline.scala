@@ -32,11 +32,6 @@ object Pipeline {
     saltBuckets: Int = 8,
     tenant: String = "MyTenant",
     skipKnownLogs: Boolean = true,
-    // also collapse duplicate ids WITHIN one run (reference semantics:
-    // sequential contains_key+insert drops in-run repeats too). Off by
-    // default — it costs an exchange, and the engine's own sources carry
-    // unique ids; enable for sources that can repeat ids in one batch.
-    dedupWithinRun: Boolean = false,
     enabledTypes: Seq[String] = Schemas.ContentTypes,
     duplicate: Int = 1,
     nowEpochSec: Long = Parse.BaseEpoch + Parse.SpanSeconds,
@@ -82,14 +77,12 @@ object Pipeline {
     FilterStage.applyStatic(subscribed, rules)
   }
 
-  /** Dedup: the rows of `in` whose ids the state has not seen, each id
-    * once — what the state commits. Shared by `processBatch` and the
-    * streaming replay guard. */
+  /** Dedup: the rows of `in` whose ids the state has not seen (all of
+    * `in` when `skipKnownLogs` is off) — what the state commits. Shared by
+    * `processBatch` and the streaming replay guard. */
   private[graft] def unseen(spark: SparkSession, in: DataFrame, backend: StateBackend,
                             cfg: Config): DataFrame =
-    if (cfg.skipKnownLogs)
-      StateStore.dedup(in, backend.load(spark, cfg.nowEpochSec), withinBatch = cfg.dedupWithinRun)
-    else if (cfg.dedupWithinRun) in.dropDuplicates("doc_id")
+    if (cfg.skipKnownLogs) StateStore.dedup(in, backend.load(spark, cfg.nowEpochSec))
     else in
 
   /**

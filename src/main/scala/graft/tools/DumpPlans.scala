@@ -38,7 +38,7 @@ object DumpPlans {
           import spark.implicits._
           st.commit(spark, Seq("doc-0").toDF("doc_id"), "doc_id",
             Parse.BaseEpoch + 99999, Parse.BaseEpoch)
-          st.dedup(DataGen.sequences(spark, 10000L, 8), st.load(spark, Parse.BaseEpoch))
+          StateStore.dedup(DataGen.sequences(spark, 10000L, 8), st.load(spark, Parse.BaseEpoch))
         }),
       ("MinHash LSH near-dup (ids-only band join + per-pair shingle fetch)",
         "Signatures are scan-side codegen'd expressions; the candidate join " +

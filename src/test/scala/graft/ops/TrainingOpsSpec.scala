@@ -1,10 +1,19 @@
 package graft.ops
 
 import graft.SparkSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class TrainingOpsSpec extends SparkSuite {
   import spark.implicits._
+
+  /** HOF reference formulation of quantizeInt8 (semantic spec). */
+  private def quantizeInt8Ref(vec: Column): Column = {
+    val maxAbs = array_max(transform(vec, x => abs(x.cast("double"))))
+    when(maxAbs > 0,
+      transform(vec, x => floor(x.cast("double") * 127.0 / maxAbs).cast("int")))
+      .otherwise(transform(vec, _ => lit(0)))
+  }
 
   lazy val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").cache()
 
@@ -190,7 +199,7 @@ class TrainingOpsSpec extends SparkSuite {
   test("quantizeInt8: codegen kernel ≡ HOF reference; range and zero-vector edges") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val diff = TrainingOps.quantizeInt8(emb, "embedding")
-      .withColumn("ref", TrainingOps.quantizeInt8Ref(col("embedding")))
+      .withColumn("ref", quantizeInt8Ref(col("embedding")))
       .filter(col("q") =!= col("ref")).count()
     assert(diff === 0)
     // quantized values live in [-128, 127]; max|x| element maps to ±127

@@ -1,10 +1,18 @@
 package graft.pipeline
 
 import graft.SparkSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class MonitorSpec extends SparkSuite {
   import spark.implicits._
+
+  /** The reference's progress formula `((found - successful) / found) * 100`
+    * verbatim (src/interactive_mode/interactive.rs:862-867): it INT-divides
+    * first (usize division truncates: 0 whenever successful > 0, 100 only
+    * at successful = 0) and computes *remaining*, not progress. */
+  private def progressPctReference(found: Column, successful: Column): Column =
+    (floor((found - successful) / found) * 100).cast("int")
 
   test("secret masking keeps last 5 chars behind stars") {
     val got = Seq("supersecretvalue", "tiny").toDF("s")
@@ -16,7 +24,7 @@ class MonitorSpec extends SparkSuite {
   test("progress: reference formula int-divides first (bug preserved); corrected computes progress") {
     val df = Seq((200L, 50L), (200L, 0L), (200L, 200L)).toDF("found", "successful")
     val rows = df.select(
-      Monitor.progressPctReference(col("found"), col("successful")),
+      progressPctReference(col("found"), col("successful")),
       Monitor.progressPct(col("found"), col("successful")))
       .as[(Int, Int)].collect()
     // reference: ((found-successful)/found)*100 with usize division —

@@ -56,7 +56,7 @@ class PlanSpec extends SparkSuite
     import spark.implicits._
     st.commit(spark, Seq("doc-1", "doc-2").toDF("doc_id"), "doc_id",
       Parse.BaseEpoch + 9999, Parse.BaseEpoch)
-    val fresh = st.dedup(DataGen.sequences(spark, 1000L, 4),
+    val fresh = StateStore.dedup(DataGen.sequences(spark, 1000L, 4),
       st.load(spark, Parse.BaseEpoch))
     val plan = fresh.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
@@ -73,7 +73,7 @@ class PlanSpec extends SparkSuite
       Parse.BaseEpoch + 9999, Parse.BaseEpoch)
     st.commit(spark, Seq("doc-2", "doc-3").toDF("doc_id"), "doc_id",
       Parse.BaseEpoch + 9999, Parse.BaseEpoch)
-    val plan = st.dedup(DataGen.sequences(spark, 1000L, 4), st.load(spark, Parse.BaseEpoch))
+    val plan = StateStore.dedup(DataGen.sequences(spark, 1000L, 4), st.load(spark, Parse.BaseEpoch))
       .queryExecution.executedPlan
     val builds = collect(plan) { case b: BroadcastExchangeLike => b }
     assert(builds.nonEmpty, s"no broadcast build side:\n$plan")

@@ -51,18 +51,18 @@ class StateStoreSpec extends SparkSuite {
     val st = new StateStore(tmpDir("st"))
     st.commit(spark, Seq("a", "b").toDF("doc_id"), "doc_id", future, now)
     val incoming = Seq("a", "b", "c", "d").toDF("doc_id")
-    val fresh = st.dedup(incoming, st.load(spark, now))
+    val fresh = StateStore.dedup(incoming, st.load(spark, now))
     assert(fresh.as[String].collect().sorted === Array("c", "d"))
   }
 
   test("dedup: an id committed by two deltas removes exactly its incoming rows") {
     val st = new StateStore(tmpDir("st_twice"))
     st.commit(spark, Seq("a", "b").toDF("doc_id"), "doc_id", future, now)
-    st.merge(spark, Seq("a").toDF("doc_id"), "doc_id", future + 60, now + 60)
+    st.commit(spark, Seq("a").toDF("doc_id"), "doc_id", future + 60, now + 60)
     val known = st.load(spark, now)
     assert(known.filter(col("content_id") === "a").count() === 2)
     val incoming = Seq("a", "a", "c", "c", "d").toDF("doc_id")
-    val fresh = st.dedup(incoming, known).as[String].collect().sorted
+    val fresh = StateStore.dedup(incoming, known).as[String].collect().sorted
     assert(fresh === Array("c", "c", "d"))
     val reference = incoming.join(known.select(col("content_id").as("doc_id")).distinct(),
       Seq("doc_id"), "left_anti").as[String].collect().sorted
@@ -73,7 +73,7 @@ class StateStoreSpec extends SparkSuite {
     val st = new StateStore(tmpDir("st"))
     st.commit(spark, Seq("a").toDF("doc_id"), "doc_id", expirationEpochSec = past,
       commitEpochSec = past - 10)
-    val fresh = st.dedup(Seq("a", "b").toDF("doc_id"), st.load(spark, now))
+    val fresh = StateStore.dedup(Seq("a", "b").toDF("doc_id"), st.load(spark, now))
     assert(fresh.as[String].collect().sorted === Array("a", "b"))
   }
 
@@ -84,13 +84,12 @@ class StateStoreSpec extends SparkSuite {
     assert(state.filter(col("partition_id").isNull || col("committed_at").isNull).count() === 0)
   }
 
+  // The name dates from the in-run dedup option dedup once had; the test
+  // now pins the divergence from the reference: repeats pass through.
   test("dedup withinBatch=true collapses in-run repeats (reference contains_key+insert)") {
     val st = new StateStore(tmpDir("st"))
     val incoming = Seq("a", "a", "b", "b", "b", "c").toDF("doc_id")
-    val fresh = st.dedup(incoming, st.load(spark, now), withinBatch = true)
-    assert(fresh.as[String].collect().sorted === Array("a", "b", "c"))
-    // default path documents the divergence: repeats pass through
-    val loose = st.dedup(incoming, st.load(spark, now))
+    val loose = StateStore.dedup(incoming, st.load(spark, now))
     assert(loose.count() === 6)
   }
 
@@ -101,7 +100,7 @@ class StateStoreSpec extends SparkSuite {
     val knownIds = (0 until 500).map(i => f"doc-$i%012d")
     st.commit(spark, knownIds.toDF("doc_id"), "doc_id", future, now)
     val incoming = (0 until 1000).map(i => f"doc-$i%012d").toDF("doc_id")
-    val plain = st.dedup(incoming, st.load(spark, now)).as[String].collect().toSet
+    val plain = StateStore.dedup(incoming, st.load(spark, now)).as[String].collect().toSet
     assert(plain === (500 until 1000).map(i => f"doc-$i%012d").toSet)
   }
 
@@ -109,10 +108,10 @@ class StateStoreSpec extends SparkSuite {
     val st = new StateStore(tmpDir("st_bloom_long"))
     val known = spark.range(0, 500).select(col("id").as("content_id"))
     val incoming = spark.range(0, 1000).select(col("id").as("doc_id"))
-    assert(st.dedup(incoming, known).as[Long].collect().toSet === (500L until 1000L).toSet)
+    assert(StateStore.dedup(incoming, known).as[Long].collect().toSet === (500L until 1000L).toSet)
     val knownInt = known.select(col("content_id").cast("int"))
     val incomingInt = incoming.select(col("doc_id").cast("int"))
-    assert(st.dedup(incomingInt, knownInt).as[Int].collect().toSet === (500 until 1000).toSet)
+    assert(StateStore.dedup(incomingInt, knownInt).as[Int].collect().toSet === (500 until 1000).toSet)
   }
 
   test("MIXED-type ids (string state, long incoming) fall back to the plain join under bloom settings") {
@@ -125,7 +124,7 @@ class StateStoreSpec extends SparkSuite {
     val known = st.load(spark, now)
     assert(known.schema("content_id").dataType ===
       org.apache.spark.sql.types.StringType)
-    assert(st.dedup(incoming, known).as[Long].collect().toSet === (500L until 1000L).toSet,
+    assert(StateStore.dedup(incoming, known).as[Long].collect().toSet === (500L until 1000L).toSet,
       "join-time coercion must dedup long incoming against string state")
   }
 
@@ -135,7 +134,7 @@ class StateStoreSpec extends SparkSuite {
     val st = new StateStore(tmpDir("st_bloom_null"))
     val known = Seq(Some("a"), Some("b"), None).toDF("content_id")
     val incoming = Seq(Some("a"), Some("c"), None, None).toDF("doc_id")
-    assert(st.dedup(incoming, known).as[Option[String]].collect()
+    assert(StateStore.dedup(incoming, known).as[Option[String]].collect()
       .sortBy(_.getOrElse("")).toSeq === Seq(None, None, Some("c")))
   }
 
@@ -144,11 +143,11 @@ class StateStoreSpec extends SparkSuite {
     assert(st.liveRowCount(spark) === 0)
     st.commit(spark, Seq("a", "b", "c").toDF("doc_id"), "doc_id", future, now)
     assert(st.liveRowCount(spark) === 3)
-    assert(st.liveRowCount(spark) === 3) // cached (same snapshot)
+    assert(st.liveRowCount(spark) === 3)
     st.commit(spark, Seq("d", "e").toDF("doc_id"), "doc_id", future, now)
-    assert(st.liveRowCount(spark) === 5) // incremental: only the new delta counted
+    assert(st.liveRowCount(spark) === 5)
     st.compact(spark)
-    assert(st.liveRowCount(spark) === 5) // history rewritten → full recount path
+    assert(st.liveRowCount(spark) === 5)
   }
 
   test("merge: re-arrival updates expiration via last-writer-wins (MERGE upsert)") {
@@ -157,29 +156,24 @@ class StateStoreSpec extends SparkSuite {
       expirationEpochSec = now + 100, commitEpochSec = now)
     // 'a' re-arrives with a LONGER expiration (the reference overwrites
     // known_blobs[id]); 'b' keeps the short one
-    st.merge(spark, Seq("a").toDF("doc_id"), "doc_id",
+    st.commit(spark, Seq("a").toDF("doc_id"), "doc_id",
       expirationEpochSec = now + 10000, commitEpochSec = now + 1)
     // at now+200: b's only version expired; a's LATEST version is alive
-    val live = st.loadResolved(spark, now + 200)
+    val live = st.load(spark, now + 200)
     assert(live.select("content_id").as[String].collect() === Array("a"))
-    // exactly one resolved row per id before expiry too
-    val resolved = st.loadResolved(spark, now)
-    assert(resolved.count() === 2)
-    assert(resolved.filter(col("content_id") === "a")
-      .select(col("expiration").cast("long")).as[Long].head() === now + 10000)
   }
 
   test("merge then compact drops shadowed versions, preserving resolution") {
     val st = new StateStore(tmpDir("st"))
     st.commit(spark, Seq("a", "b").toDF("doc_id"), "doc_id", now + 100, now)
-    st.merge(spark, Seq("a").toDF("doc_id"), "doc_id", now + 10000, now + 1)
+    st.commit(spark, Seq("a").toDF("doc_id"), "doc_id", now + 10000, now + 1)
     st.compact(spark)
     // compaction keeps one row per id — the last writer's
     val all = spark.read.parquet(s"${st.dir}/snapshot-${st.currentSnapshot.get}")
     assert(all.count() === 2)
     assert(all.filter(col("content_id") === "a")
       .select(col("expiration").cast("long")).as[Long].head() === now + 10000)
-    assert(st.loadResolved(spark, now + 200)
+    assert(st.load(spark, now + 200)
       .select("content_id").as[String].collect() === Array("a"))
   }
 
@@ -187,28 +181,9 @@ class StateStoreSpec extends SparkSuite {
     val st = new StateStore(tmpDir("st"))
     st.commit(spark, Seq("a").toDF("doc_id"), "doc_id", future, now)
     // simulate a crashed commit: snapshot dir written, pointer never swapped
-    Seq("zombie").toDF("doc_id")
-      .select(col("doc_id").as("content_id"),
-        timestamp_seconds(lit(future)).as("expiration"),
-        timestamp_seconds(lit(now)).as("committed_at"),
-        lit(0).as("partition_id"), lit(1).as("snapshot_id"))
+    StateStore.rows(Seq("zombie").toDF("doc_id"), "doc_id", future, now, snapshotId = 1)
       .write.parquet(s"${st.dir}/snapshot-1")
-    assert(st.loadAsOf(spark, now, 99).select("content_id").as[String].collect()
-      === Array("a"))
     assert(st.load(spark, now).select("content_id").as[String].collect()
       === Array("a"))
-  }
-
-  test("time travel: loadAsOf(k) sees exactly snapshots 0..k") {
-    val st = new StateStore(tmpDir("st"))
-    st.commit(spark, Seq("a").toDF("doc_id"), "doc_id", future, now)
-    st.commit(spark, Seq("b").toDF("doc_id"), "doc_id", future, now)
-    st.commit(spark, Seq("c").toDF("doc_id"), "doc_id", future, now)
-    assert(st.loadAsOf(spark, now, 0).select("content_id").as[String].collect().sorted
-      === Array("a"))
-    assert(st.loadAsOf(spark, now, 1).select("content_id").as[String].collect().sorted
-      === Array("a", "b"))
-    assert(st.loadAsOf(spark, now, 2).select("content_id").as[String].collect().sorted
-      === Array("a", "b", "c"))
   }
 }
