@@ -20,21 +20,6 @@ object Hashing {
 
   val P = 1000000007L
 
-  /** Rolling hash over Unicode code points: acc*31 + cp, mod P.
-    * ≡ TextOps.polyHash (aggregate over split chars). */
-  def polyHash(s: UTF8String): Long = {
-    val str = s.toString
-    var acc = 0L
-    var i = 0
-    val len = str.length
-    while (i < len) {
-      val cp = str.codePointAt(i)
-      acc = (acc * 31 + cp) % P
-      i += Character.charCount(cp)
-    }
-    acc
-  }
-
   /** Whitespace words of a string — identical to
     * split(trim(text), "\\s+"): Spark's trim strips ONLY the space
     * character (not \t/\n like Java's String.trim), so strip spaces
@@ -51,6 +36,8 @@ object Hashing {
     if (t.isEmpty) Array("") else t.split("\\s+", -1)
   }
 
+  /** Rolling hash over Unicode code points: acc*31 + cp, mod P.
+    * ≡ TextOps.polyHash (aggregate over split chars). */
   private def polyHashStr(str: String): Long = {
     var acc = 0L
     var i = 0

@@ -88,16 +88,6 @@ case class AuditTsExpr(child: Expression, baseEpoch: Long, spanSeconds: Long)
     copy(child = c)
 }
 
-case class PolyHashExpr(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any =
-    Hashing.polyHash(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Hashing.polyHash($c)")
-  override protected def withNewChildInternal(c: Expression): PolyHashExpr = copy(c)
-}
-
 case class ShingleHashesExpr(child: Expression, n: Int)
     extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -130,10 +120,11 @@ case class SimHash64Expr(child: Expression)
   override protected def withNewChildInternal(c: Expression): SimHash64Expr = copy(c)
 }
 
-/** Base for float/double array pair reductions. */
-abstract class ArrayPairReduction extends BinaryExpression {
+/** Cosine similarity of two array<float> or two array<double> columns. */
+case class CosineSimExpr(left: Expression, right: Expression)
+    extends BinaryExpression {
   override def dataType: DataType = DoubleType
-  protected def isFloatArray: Boolean = left.dataType match {
+  private def isFloatArray: Boolean = left.dataType match {
     case ArrayType(FloatType, _) => true
     case _ => false
   }
@@ -149,22 +140,6 @@ abstract class ArrayPairReduction extends BinaryExpression {
           s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
     }
   }
-}
-
-case class DotProductExpr(left: Expression, right: Expression)
-    extends ArrayPairReduction {
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Hashing.dotF(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], isFloatArray)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.Hashing.dotF($a, $b, $isFloatArray)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-}
-
-case class CosineSimExpr(left: Expression, right: Expression)
-    extends ArrayPairReduction {
   override def nullSafeEval(a: Any, b: Any): Any =
     Hashing.cosineF(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
       b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], isFloatArray)
@@ -521,7 +496,6 @@ object RowJsonExpr {
 /** Column-API surface for the custom expressions. */
 object GraftFunctions {
   private def c(e: Expression): Column = ColumnGlue.column(e)
-  def poly_hash(s: Column): Column = c(PolyHashExpr(ColumnGlue.expression(s)))
   def doc_id_num(s: Column): Column = c(DocIdNumExpr(ColumnGlue.expression(s)))
   def audit_field(s: Column, kind: String): Column =
     c(AuditFieldExpr(ColumnGlue.expression(s), kind))
@@ -567,6 +541,5 @@ object GraftFunctions {
     c(PqAdcExpr(ColumnGlue.expression(codes), ColumnGlue.expression(lut), ksub))
   def jaccard_counts(a: Column, b: Column): Column =
     c(JaccardCountsExpr(ColumnGlue.expression(a), ColumnGlue.expression(b)))
-  def dot_product(a: Column, b: Column): Column = c(DotProductExpr(ColumnGlue.expression(a), ColumnGlue.expression(b)))
   def cosine_sim(a: Column, b: Column): Column = c(CosineSimExpr(ColumnGlue.expression(a), ColumnGlue.expression(b)))
 }

@@ -240,7 +240,6 @@ object DedupOps {
    * algorithms).
    */
   def connectedComponents(pairs: DataFrame, nodes: DataFrame,
-                          maxIter: Int = 20,
                           driverEdgeThreshold: Long = 500000L): DataFrame = {
     // HYBRID, the GraphFrames pattern: near-dup pair sets are tiny relative
     // to the corpus (they ARE the duplicates — a pair set anywhere near
@@ -262,12 +261,13 @@ object DedupOps {
         org.apache.spark.sql.types.LongType
       if (longIds && pairsP.count() <= driverEdgeThreshold)
         ccDriver(pairsP, nodes)
-      else ccDistributed(pairsP, nodes, maxIter)
+      else ccDistributed(pairsP, nodes)
     } finally { pairsP.unpersist(); () }
   }
 
-  private def ccDistributed(pairs: DataFrame, nodes: DataFrame,
-                            maxIter: Int): DataFrame = {
+  private val CcMaxIter = 20 // O(log diameter) rounds: ample for near-dup clusters
+
+  private def ccDistributed(pairs: DataFrame, nodes: DataFrame): DataFrame = {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .localCheckpoint()
@@ -279,7 +279,7 @@ object DedupOps {
       .withColumn("label", col("id")).localCheckpoint()
     var iter = 0
     var changed = 1L
-    while (changed > 0 && iter < maxIter) {
+    while (changed > 0 && iter < CcMaxIter) {
       // min over neighbor labels
       val nbrMin = edges
         .join(labels.select(col("id").as("dst"), col("label").as("dl")), Seq("dst"))

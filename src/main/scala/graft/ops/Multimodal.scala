@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** One media asset: opaque binary payload + typed metadata. */
 case class MediaRow(media_id: Long, media_type: String,
@@ -342,22 +341,5 @@ object Multimodal {
           frameMeans.head.toFloat, frameMeans.last.toFloat, motion.toFloat,
           yPlanes.length.toFloat))
     }
-  }
-
-  /** Frame sampling: every `stride`-th REAL frame of the Y4M payloads —
-    * one row per sampled frame carrying that frame's luma plane only (the
-    * chroma and the other frames' bytes die here, before any exchange).
-    * Unparsable videos yield no frames (they surface as ok=false in
-    * `decode`; this stage is downstream of quarantine in a real pipeline). */
-  def sampleFrames(media: Dataset[MediaRow], stride: Int): DataFrame = {
-    require(stride > 0)
-    import media.sparkSession.implicits._
-    media.filter(_.media_type == "video").mapPartitions { it =>
-      it.flatMap { m =>
-        parseY4m(m.content).toSeq.flatMap { case (_, _, yPlanes) =>
-          yPlanes.indices.by(stride).map(f => (m.media_id, f, yPlanes(f)))
-        }
-      }
-    }.toDF("media_id", "frame_idx", "frame_bytes")
   }
 }

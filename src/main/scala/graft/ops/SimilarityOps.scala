@@ -60,6 +60,9 @@ object SimilarityOps {
   private def cosineFast(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.cosine_sim(a, b)
 
+  /** Largest k the `topk_ids` aggregate serves in [[rankTopK]]. */
+  private[graft] val MaxAggTopK = 64
+
   /**
    * Per-group top-k over scored candidate rows — the shared rank tail of
    * every probe here. For long ids (every corpus in this engine) it is the
@@ -73,11 +76,11 @@ object SimilarityOps {
   private def rankTopK(scored: DataFrame, groupCol: String, keyCol: String,
                        idCol: String, k: Int, desc: Boolean): DataFrame = {
     import org.apache.spark.sql.types.{DoubleType, LongType}
-    // the aggregate allocates a k-entry buffer PER GROUP per task — for
-    // top-k/shortlist sizes (1..100s) that is the point; a huge k would
-    // turn buffers into the memory cost the window never has. Non-(double,
-    // long) inputs degrade to the window, never to an analysis error.
-    if (k <= 4096 && scored.schema(idCol).dataType == LongType &&
+    // the aggregate holds a k × 18 B buffer PER GROUP per task, up to 4096
+    // groups (GraftSession's fallbackThreshold): k ≤ 64 bounds that at
+    // ≈ 4.7 MB per task; a larger k takes the window, whose sort spills.
+    // Non-(double, long) inputs degrade to the window, never to an error.
+    if (k <= MaxAggTopK && scored.schema(idCol).dataType == LongType &&
         scored.schema(keyCol).dataType == DoubleType) {
       scored.groupBy(groupCol)
         .agg(graft.functions.GraftAggregates.topk_ids(
@@ -199,6 +202,10 @@ object SimilarityOps {
     rankTopK(scored, "query_id", "sim", "neighbor_id", k, desc = true)
   }
 
+  private val KmeansIters = 2 // Lloyd rounds of the coarse k-means
+  private val HomeLists = 2   // posting lists each vector is homed in
+  private val RefineIters = 1 // Lloyd rounds of the hierarchical fine level
+
   /**
    * k-means centroids for the IVF coarse quantizer, trained FAISS-style on
    * a hash-selected sample (~64 points per centroid) rather than the full
@@ -207,17 +214,17 @@ object SimilarityOps {
    *  - init: `k` points chosen by hash order over the whole id space (a
    *    deterministic spread, not an id-prefix sample — prefixes correlate
    *    with insertion order and collapse recall);
-   *  - `iters` Lloyd rounds: broadcast centroids → per-point argmax by
-   *    cosine (narrow) → element-wise mean per cluster (posexplode +
-   *    two-level aggregate, shuffled only over the sample);
+   *  - [[KmeansIters]] Lloyd rounds: broadcast centroids → per-point
+   *    argmax by cosine (narrow) → element-wise mean per cluster
+   *    (posexplode + two-level aggregate, shuffled only over the sample);
    *  - clusters that lose all points drop out (k shrinks, never crashes).
    *
    * Returns (cid, cv). The result is broadcast by the callers, so size it
    * like any broadcast table: nCentroids × dim × 4B ≤ ~100 MB — beyond
    * that a hierarchical (two-level) quantizer is the right tool.
    */
-  def kmeansCentroids(vecs: DataFrame, k: Int, iters: Int = 2): DataFrame = {
-    require(k > 0 && iters >= 0)
+  private[graft] def kmeansCentroids(vecs: DataFrame, k: Int): DataFrame = {
+    require(k > 0)
     val spark = vecs.sparkSession
     val n = vecs.count()
     val mod = 1000000L
@@ -243,7 +250,7 @@ object SimilarityOps {
       .orderBy(pmod(xxhash64(col("id"), lit(31)), lit(mod)), col("id"))
       .limit(k).select(col("id"), col("v")).collect()
       .map(r => (idLong(r, 0), vecFloats(r, 1)))
-    for (_ <- 1 to iters if centArr.nonEmpty) {
+    for (_ <- 1 to KmeansIters if centArr.nonEmpty) {
       val means = train.select(
           // get() (null out-of-bounds) not element_at: a zero-norm vector
           // has no defined nearest centroid and must drop out, not throw
@@ -287,8 +294,9 @@ object SimilarityOps {
 
   /**
    * Build the IVF index: k-means coarse quantizer + multi-assignment
-   * ("spill", nHome nearest lists per vector — index is nHome× bigger, but
-   * boundary neighbors stop being missed; FAISS calls this replication).
+   * ("spill", [[HomeLists]] nearest lists per vector — the index is that
+   * many times bigger, but boundary neighbors stop being missed; FAISS
+   * calls this replication).
    *
    * Assignment is ONE narrow codegen call per row (`nearest_centroids`,
    * centroids embedded in the generated code): the broadcast-join + per-id
@@ -298,10 +306,9 @@ object SimilarityOps {
    * the kernel's ranking bit-identical to the join formulation.
    */
   def buildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                    nCentroids: Int, kmeansIters: Int = 2,
-                    nHome: Int = 2, persist: Boolean = true): IvfIndex = {
+                    nCentroids: Int, persist: Boolean = true): IvfIndex = {
     val vecs = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val centArr = kmeansCentroids(vecs, nCentroids, kmeansIters).collect()
+    val centArr = kmeansCentroids(vecs, nCentroids).collect()
       .map(r => (idLong(r, 0), vecFloats(r, 1)))
       .sortBy(_._1)
     // an empty corpus yields zero centroids — the index is simply empty,
@@ -312,7 +319,7 @@ object SimilarityOps {
           .select(lit(0L).as("cid"), col("id").as("neighbor_id"), col("v").as("cv2"))
       else graft.util.Par.ensure(vecs).select(
         explode(graft.functions.GraftFunctions.nearest_centroids(
-          col("v"), centArr.toSeq, nHome)).as("cid"),
+          col("v"), centArr.toSeq, HomeLists)).as("cid"),
         col("id").as("neighbor_id"), col("v").as("cv2"))
     val homed = if (persist) homed0.persist() else homed0
     IvfIndex(centArr, homed)
@@ -348,21 +355,6 @@ object SimilarityOps {
   }
 
   /**
-   * IVF-style ANN top-k, one-shot convenience: build + self-probe. The
-   * index is NOT persisted (the single downstream action would only read
-   * it once — caching it would just leak executor memory). Benchmarks and
-   * services should call buildIvfIndex / ivfProbe separately so build cost
-   * is amortized across probe batches, not re-paid per batch.
-   */
-  def ivfTopK(corpus: DataFrame, idCol: String, vecCol: String,
-              k: Int, nCentroids: Int, nProbe: Int,
-              kmeansIters: Int = 2, nHome: Int = 2): DataFrame = {
-    val index = buildIvfIndex(corpus, idCol, vecCol, nCentroids, kmeansIters,
-      nHome, persist = false)
-    ivfProbe(index, corpus, idCol, vecCol, k, nProbe)
-  }
-
-  /**
    * Two-level (hierarchical) IVF index — lifts the flat quantizer's
    * broadcast ceiling. The flat contract caps driver-held centroids at
    * ~100 MB (nCentroids × dim × 4B); with 10^9+ vectors the standard
@@ -391,7 +383,7 @@ object SimilarityOps {
    * Build the two-level index. Level 1 is the flat k-means coarse
    * quantizer. Level 2 initializes each cell's sub-centroids from a
    * deterministic hash-spread of the cell's own points, then runs
-   * `refineIters` DISTRIBUTED Lloyd rounds: assignment is a join on ccid
+   * [[RefineIters]] DISTRIBUTED Lloyd rounds: assignment is a join on ccid
    * over a hash-selected training sample (fan-out bounded at sample ×
    * nFinePerCell — never corpus × k), the mean update a per-(cell, dim)
    * aggregate. The one corpus-wide shuffle is the homed layout itself —
@@ -399,11 +391,10 @@ object SimilarityOps {
    */
   def buildHierIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
                         nCoarse: Int, nFinePerCell: Int,
-                        kmeansIters: Int = 2, refineIters: Int = 1,
-                        nHome: Int = 2, persist: Boolean = true): HierIvfIndex = {
-    require(nCoarse > 0 && nFinePerCell > 0 && refineIters >= 0)
+                        persist: Boolean = true): HierIvfIndex = {
+    require(nCoarse > 0 && nFinePerCell > 0)
     val vecs = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val coarse = kmeansCentroids(vecs, nCoarse, kmeansIters).collect()
+    val coarse = kmeansCentroids(vecs, nCoarse).collect()
       .map(r => (idLong(r, 0), vecFloats(r, 1))).sortBy(_._1)
     if (coarse.isEmpty) {
       val empty = vecs.filter(lit(false))
@@ -438,7 +429,7 @@ object SimilarityOps {
       .select(col("ccid"), (col("__r") - 1).cast("long").as("fcid"),
         col("v").cast("array<float>").as("fv"))
       .localCheckpoint()
-    for (_ <- 1 to refineIters) {
+    for (_ <- 1 to RefineIters) {
       val asg = sample.join(fine, Seq("ccid"))
         .withColumn("fsim", cosineFast(col("v").cast("array<float>"), col("fv")))
       val wBest = Window.partitionBy("ccid", "id")
@@ -471,12 +462,12 @@ object SimilarityOps {
       .toDF("ccid", "fcid", "fv")
       .select(col("ccid"), col("fcid"), col("fv").cast("array<float>").as("fv"))
     val fineAll = fine.unionByName(coarseAsFine)
-    // inverted file keyed on the full (ccid, fcid) cell: nHome coarse homes
+    // inverted file keyed on the full (ccid, fcid) cell: HomeLists coarse homes
     // per vector (boundary replication, as in the flat build), nearest fine
     // list within each home
     val homedCoarse = graft.util.Par.ensure(vecs).select(
       explode(graft.functions.GraftFunctions.nearest_centroids(
-        col("v"), coarse.toSeq, nHome)).as("ccid"),
+        col("v"), coarse.toSeq, HomeLists)).as("ccid"),
       col("id").as("neighbor_id"), col("v").as("cv2"))
     val wHome = Window.partitionBy("ccid", "neighbor_id")
       .orderBy(col("hsim").desc, col("fcid"))
@@ -720,12 +711,14 @@ object SimilarityOps {
     rankTopK(scored, "query_id", "d2", "neighbor_id", k, desc = false)
   }
 
-  /** Signature width that targets `targetOccupancy` vectors per bucket:
+  private[graft] val TargetOccupancy = 32 // vectors per LSH bucket
+
+  /** Signature width that targets [[TargetOccupancy]] vectors per bucket:
     * 2^bits ≈ n / target. The bucket-local self-join is quadratic in
     * occupancy, so a FIXED bits at growing n is a disguised near-cartesian
     * — this is the standard LSH sizing rule (Bench uses the same one). */
-  def occupancyBits(n: Long, targetOccupancy: Int = 32): Int =
-    math.max(4, (math.log(math.max(1L, n).toDouble / targetOccupancy) /
+  def occupancyBits(n: Long): Int =
+    math.max(4, (math.log(math.max(1L, n).toDouble / TargetOccupancy) /
       math.log(2)).ceil.toInt)
 
   /**
@@ -742,13 +735,11 @@ object SimilarityOps {
    */
   def embeddingNearDups(corpus: DataFrame, idCol: String, vecCol: String,
                         minCosine: Double, bits: Int = 0,
-                        targetOccupancy: Int = 32,
                         knownCorpusSize: Long = -1L): DataFrame = {
     val src = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
     val b0 =
       if (bits > 0) bits
-      else occupancyBits(
-        if (knownCorpusSize >= 0L) knownCorpusSize else src.count(), targetOccupancy)
+      else occupancyBits(if (knownCorpusSize >= 0L) knownCorpusSize else src.count())
     // signature scan floored; the per-pair fetch joins keep the raw scan
     val signed = graft.util.Par.ensure(src).select(col("id"),
       graft.functions.GraftFunctions.lsh_signature(col("v"), b0).as("sig"))

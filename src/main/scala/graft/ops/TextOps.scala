@@ -21,17 +21,6 @@ object TextOps {
   /** Whitespace word tokenization (empty-safe). */
   def words(text: Column): Column = split(trim(text), "\\s+")
 
-  /** Whitespace token count — the cheap length signal. */
-  def tokenCount(text: Column): Column = size(words(text))
-
-  /**
-   * BPE-ish sub-word token count: splits on word/punct/space boundaries the
-   * way a BPE pre-tokenizer does (letters+digits runs vs single punct).
-   */
-  def bpeishTokenCount(text: Column): Column =
-    size(filter(split(text, "(?=[^\\p{L}\\p{N}])|(?<=[^\\p{L}\\p{N}])"),
-      t => t =!= "" && t =!= " "))
-
   /** Portable polynomial rolling hash of a string: fold codepoints with
     * acc*31+cp mod 1e9+7. Identical in DuckDB via list_reduce. */
   def polyHash(s: Column): Column =
@@ -67,13 +56,6 @@ object TextOps {
     transform(sequence(lit(0), nChunks - 1),
       i => concat_ws(" ", slice(ws, i * chunkWords + 1, lit(chunkWords))))
   }
-
-  /** Character n-gram shingles; shorter-than-n text yields itself. */
-  def charNgrams(text: Column, n: Int): Column =
-    when(length(text) >= n,
-      transform(sequence(lit(1), length(text) - lit(n - 1)),
-        i => text.substr(i, lit(n))))
-      .otherwise(array(text))
 
   /** Distinct portable hashes of word n-gram shingles — the document's
     * shingle set for minhash / Jaccard. */

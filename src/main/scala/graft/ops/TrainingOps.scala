@@ -159,26 +159,6 @@ object TrainingOps {
       .limit(topK)
 
   /**
-   * vocabStats with APPROXIMATE document frequency — the 100 TB variant.
-   * Exact `count_distinct(id)` per word keeps every distinct (word, id)
-   * pair alive through the aggregation: for frequent words that is a
-   * per-word set the size of the corpus, and it is the one piece of
-   * vocabStats whose state grows with data rather than with vocabulary.
-   * `approx_count_distinct` (HyperLogLog++) replaces it with a fixed-size
-   * sketch per word (~1.5 KB at rsd=0.02) that merges map-side, so the
-   * aggregate is fully partial-combining again. Occurrences (the ranking
-   * key) stay exact — only doc_freq is estimated, within ±rsd.
-   */
-  def vocabStatsApprox(df: DataFrame, idCol: String, textCol: String,
-                       topK: Int, rsd: Double = 0.02): DataFrame =
-    df.select(col(idCol).as("id"), explode(TextOps.words(col(textCol))).as("word"))
-      .groupBy("word")
-      .agg(count(lit(1)).as("occurrences"),
-           approx_count_distinct(col("id"), rsd).as("doc_freq"))
-      .orderBy(col("occurrences").desc, col("word"))
-      .limit(topK)
-
-  /**
    * Symmetric int8 quantization of an embedding column — the storage/
    * serving compression step after embedding generation. Codegen'd kernel
    * (one pass for max|x|, one for the quantized values); the HOF reference

@@ -30,8 +30,9 @@ object GraftSession {
       // the default 128 makes every ANN probe (thousands of query groups
       // per partition) sort its scored candidates — including the embedding
       // arrays the cosine/ADC key reads — which is exactly the all-rows
-      // sort the aggregate replaces. Top-k buffers are bounded (k ids +
-      // doubles each), so 4096 in-memory groups is ≤ a few MB per task;
+      // sort the aggregate replaces. A top-k buffer holds k entries of
+      // 18 B and SimilarityOps caps the aggregate at k ≤ 64, so 4096
+      // in-memory groups is ≤ 4096 × 64 × 18 B ≈ 4.7 MB per task;
       // beyond it the graceful sort fallback still applies. NOTE this is
       // session-global, so collect_list aggregates (span-dedup reassembly)
       // also hold up to 4096 in-flight groups — ~4096 × one document of

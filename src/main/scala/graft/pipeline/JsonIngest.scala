@@ -61,12 +61,4 @@ object JsonIngest {
     val quarantined = withRec.filter(!ok).drop("__rec")
     (parsed, quarantined)
   }
-
-  /** Per-partition poison-row metric rows (stage, partition_id, rows) —
-    * same lineage shape as Pipeline's stage metrics (north rule). */
-  def quarantineMetrics(quarantined: DataFrame): DataFrame =
-    quarantined
-      .groupBy(spark_partition_id().as("partition_id"))
-      .agg(count(lit(1)).as("rows"))
-      .select(lit("corrupt_payload").as("stage"), col("partition_id"), col("rows"))
 }

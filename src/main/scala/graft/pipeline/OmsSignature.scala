@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, SparkSession}
 import java.nio.charset.StandardCharsets
 import java.util.Base64
 import javax.crypto.Mac
@@ -16,10 +15,8 @@ import javax.crypto.spec.SecretKeySpec
  *          base64(hmacSha256(base64decode(key), stringToHash))
  *
  * Only needed when emulating the OMS transport byte-for-byte (counts and
- * bodies don't require it — SURVEY §7.2), so per SURVEY this is the one
- * place a plain Scala UDF is acceptable: javax.crypto has no Catalyst
- * expression, and signatures are per-batch metadata, not a per-row hot
- * path.
+ * bodies don't require it — SURVEY §7.2). A signature covers one POST
+ * body, not one row: `Transport.postOms` signs each batch as it sends it.
  */
 object OmsSignature {
 
@@ -33,16 +30,5 @@ object OmsSignature {
     mac.init(new SecretKeySpec(Base64.getDecoder.decode(base64Key), "HmacSHA256"))
     val sig = mac.doFinal(stringToHash.getBytes(StandardCharsets.UTF_8))
     s"SharedKey $workspaceId:${Base64.getEncoder.encodeToString(sig)}"
-  }
-
-  /** Column-level form, registered as a UDF. */
-  def register(spark: SparkSession, workspaceId: String, base64Key: String): Unit =
-    spark.udf.register("oms_signature",
-      (date: String, len: Long) => buildSignature(workspaceId, base64Key, date, len))
-
-  def signatureCol(spark: SparkSession, workspaceId: String, base64Key: String)
-                  (date: Column, contentLength: Column): Column = {
-    register(spark, workspaceId, base64Key)
-    org.apache.spark.sql.functions.call_udf("oms_signature", date, contentLength)
   }
 }

@@ -41,7 +41,7 @@ object Pipeline {
     // tiny parquet files per run — the classic small-files problem, paid
     // once in write overhead and forever by every downstream scan. Sizing
     // uses the already-materialized routed count and a narrow coalesce
-    // (no exchange). 0 disables (one file per cache partition).
+    // (no exchange). Must be positive.
     targetRowsPerFile: Long = 250000L,
     // None = engine default: every sink shape is written (bench/test mode).
     // Some(outputConfig) = honor the reference's per-interface enablement:
@@ -54,7 +54,9 @@ object Pipeline {
     // says — e.g. CatalogStateBackend("cat.db.known_content") for an
     // Iceberg/Delta (or plain session-catalog) table. The dedup anti-join,
     // commit ordering and run stats are identical across backends.
-    stateBackend: Option[StateBackend] = None)
+    stateBackend: Option[StateBackend] = None) {
+    require(targetRowsPerFile > 0, s"targetRowsPerFile must be > 0, got $targetRowsPerFile")
+  }
 
   case class Result(stats: RunStats, snapshot: Option[Int])
 
@@ -216,16 +218,14 @@ object Pipeline {
       // parallelism (coalesce cannot expand; forcing a repartition here
       // would add an unmeasured full-payload exchange).
       val writeParallelism = spark.sparkContext.defaultParallelism
-      def sizedBy(df: DataFrame, n: Long): DataFrame =
-        if (cfg.targetRowsPerFile <= 0) df
-        else {
-          val p = math.max(1L, (n + cfg.targetRowsPerFile - 1) / cfg.targetRowsPerFile).toInt
-          // the floor itself is row-bounded (≥1k rows per write task) so a
-          // near-empty set (quarantine) still collapses to one file
-          val floor = math.min(writeParallelism.toLong,
-            math.max(1L, (n + 999) / 1000)).toInt
-          df.coalesce(math.max(p, floor))
-        }
+      def sizedBy(df: DataFrame, n: Long): DataFrame = {
+        val p = math.max(1L, (n + cfg.targetRowsPerFile - 1) / cfg.targetRowsPerFile).toInt
+        // the floor itself is row-bounded (≥1k rows per write task) so a
+        // near-empty set (quarantine) still collapses to one file
+        val floor = math.min(writeParallelism.toLong,
+          math.max(1L, (n + 999) / 1000)).toInt
+        df.coalesce(math.max(p, floor))
+      }
       val routed = Routed(cached, sizedBy(cached, routedCount))
       // quarantine sized from ITS OWN count (usually ≈0; sizing it from the
       // routed count writes near-empty files when rules are lax and

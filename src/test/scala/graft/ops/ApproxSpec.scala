@@ -20,20 +20,4 @@ class ApproxSpec extends SparkSuite {
       assert(err < 0.05, s"$et: approx $approx vs exact $exact (err $err)")
     }
   }
-
-  test("vocabStatsApprox: same top-k words, doc_freq within 5% of exact") {
-    val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    val exact = TrainingOps.vocabStats(docs, "doc_id", "text", 50)
-      .as[(String, Long, Long)].collect()
-    val approx = TrainingOps.vocabStatsApprox(docs, "doc_id", "text", 50)
-      .as[(String, Long, Long)].collect()
-    // occurrences are exact in both variants, so ranking is identical
-    assert(approx.map(r => (r._1, r._2)).toSeq === exact.map(r => (r._1, r._2)).toSeq)
-    val exactDf = exact.map(r => r._1 -> r._3).toMap
-    for ((word, _, df) <- approx) {
-      val e = exactDf(word)
-      val err = math.abs(df - e).toDouble / math.max(1L, e)
-      assert(err < 0.05, s"$word: approx doc_freq $df vs exact $e (err $err)")
-    }
-  }
 }

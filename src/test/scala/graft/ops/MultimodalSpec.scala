@@ -96,25 +96,4 @@ class MultimodalSpec extends SparkSuite {
     val decoded = Multimodal.decode(media)
     assert(decoded.rdd.getNumPartitions === n, "decode must not shuffle")
   }
-
-  test("frame sampling explodes videos into REAL stride-sampled luma planes") {
-    val frames = Multimodal.sampleFrames(media, stride = 2)
-    assert(frames.columns.toSeq === Seq("media_id", "frame_idx", "frame_bytes"))
-    assert(frames.count() > 0)
-    assert(frames.filter(pmod(col("frame_idx"), lit(2)) =!= 0).count() === 0)
-    // only videos contribute
-    val vids = media.toDF().filter(col("media_type") === "video").select("media_id")
-    assert(frames.select("media_id").distinct().exceptAll(vids).isEmpty)
-    // byte-exactness on a planted video: stride 2 over 3 frames → frames 0, 2
-    val bytes = Multimodal.y4mBytes(2, 2, 3, (f, x, y) => f * 10 + y * 2 + x)
-    val planted = Multimodal.sampleFrames(
-      Seq(MediaRow(7L, "video", bytes, Map.empty)).toDS(), stride = 2)
-      .orderBy("frame_idx")
-      .as[(Long, Int, Array[Byte])].collect()
-    assert(planted.map(_._2).toSeq === Seq(0, 2))
-    assert(planted(0)._3.map(_ & 0xff).toSeq === Seq(0, 1, 2, 3))
-    assert(planted(1)._3.map(_ & 0xff).toSeq === Seq(20, 21, 22, 23))
-    // the sampled row carries ONE luma plane, not the whole payload
-    assert(planted.forall(_._3.length === 4))
-  }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class SimilarityOpsSpec extends SparkSuite {
@@ -14,6 +15,13 @@ class SimilarityOpsSpec extends SparkSuite {
     SimilarityOps.bruteForceTopK(emb, emb, "vec_id", "embedding", 1)
       .filter(col("rank") === 1).as[(Long, Long, Int)].collect()
       .map(r => (r._1, r._2)).toMap
+
+  /** Build an unpersisted IVF index over `corpus` and self-probe it. */
+  private def ivfSelfProbe(corpus: DataFrame, nCentroids: Int, nProbe: Int): DataFrame = {
+    val index = SimilarityOps.buildIvfIndex(corpus, "vec_id", "embedding",
+      nCentroids, persist = false)
+    SimilarityOps.ivfProbe(index, corpus, "vec_id", "embedding", k = 1, nProbe)
+  }
 
   test("cosine basics: self=1, orthogonal=0") {
     val df = Seq(
@@ -45,6 +53,34 @@ class SimilarityOpsSpec extends SparkSuite {
     assert(got === expected)
   }
 
+  test("top-k above the topk_ids cap (k = 65) plans a Window and returns the aggregate's rows") {
+    // the aggregate holds k entries per in-memory group per task; past the
+    // cap the rank tail must switch to the window, not grow the buffers
+    val sample = emb.orderBy("vec_id").limit(100).select("vec_id", "embedding").cache()
+    val k = SimilarityOps.MaxAggTopK + 1
+    assert(k === 65)
+    val viaWindow = SimilarityOps.bruteForceTopK(sample, sample, "vec_id", "embedding", k)
+    val plan = viaWindow.queryExecution.executedPlan.toString
+    assert(plan.contains("Window") && !plan.contains("topk_ids"), s"plan:\n$plan")
+    val atCap = SimilarityOps.bruteForceTopK(sample, sample, "vec_id", "embedding", k - 1)
+      .queryExecution.executedPlan.toString
+    assert(atCap.contains("topk_ids") && !atCap.contains("Window"), s"plan:\n$atCap")
+    // the aggregate formulation at the same k, over the same scored pairs
+    val viaAgg = sample.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
+      .crossJoin(sample.select(col("vec_id").as("query_id"), col("embedding").as("qv")))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .groupBy("query_id")
+      .agg(graft.functions.GraftAggregates.topk_ids(
+        graft.functions.GraftFunctions.cosine_sim(col("qv"), col("cv")),
+        col("neighbor_id"), k, desc = true).as("t"))
+      .select(col("query_id"), posexplode(col("t")).as(Seq("p", "neighbor_id")))
+      .select(col("query_id"), col("neighbor_id"), (col("p") + 1).as("rank"))
+    val got = viaWindow.as[(Long, Long, Int)].collect().toSet
+    assert(got.size === 100 * k)
+    assert(got === viaAgg.as[(Long, Long, Int)].collect().toSet)
+    sample.unpersist()
+  }
+
   test("brute-force plan broadcasts the query side (no shuffle of corpus)") {
     val plan = SimilarityOps.bruteForceTopK(emb, emb.limit(5), "vec_id", "embedding", 3)
       .queryExecution.executedPlan.toString
@@ -66,8 +102,7 @@ class SimilarityOpsSpec extends SparkSuite {
 
   test("ivfTopK: inverted-file probe recalls most true top-1 neighbors") {
     val brute = bruteTop1
-    val ivf = SimilarityOps.ivfTopK(emb, "vec_id", "embedding",
-        k = 1, nCentroids = 16, nProbe = 4)
+    val ivf = ivfSelfProbe(emb, nCentroids = 16, nProbe = 4)
       .filter(col("rank") === 1).as[(Long, Long, Int)].collect()
       .map(r => (r._1, r._2)).toMap
     assert(ivf.size === brute.size, "every vector must get an answer")
@@ -81,9 +116,9 @@ class SimilarityOpsSpec extends SparkSuite {
 
   test("kmeansCentroids: deterministic, <=k centroids, same dim as input") {
     val vecs = emb.select(col("vec_id").as("id"), col("embedding").as("v"))
-    val c1 = SimilarityOps.kmeansCentroids(vecs, 8, 2)
+    val c1 = SimilarityOps.kmeansCentroids(vecs, 8)
       .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val c2 = SimilarityOps.kmeansCentroids(vecs, 8, 2)
+    val c2 = SimilarityOps.kmeansCentroids(vecs, 8)
       .as[(Long, Array[Float])].collect().sortBy(_._1)
     assert(c1.map(_._1) === c2.map(_._1))
     assert(c1.length <= 8 && c1.length > 1)
@@ -107,8 +142,7 @@ class SimilarityOpsSpec extends SparkSuite {
   }
 
   test("buildIvfIndex + ivfProbe ≡ one-shot ivfTopK (build amortized out of probes)") {
-    val oneShot = SimilarityOps.ivfTopK(emb, "vec_id", "embedding",
-        k = 1, nCentroids = 16, nProbe = 4)
+    val oneShot = ivfSelfProbe(emb, nCentroids = 16, nProbe = 4)
       .as[(Long, Long, Int)].collect().toSet
     val index = SimilarityOps.buildIvfIndex(emb, "vec_id", "embedding",
       nCentroids = 16).materialize()
@@ -130,13 +164,10 @@ class SimilarityOpsSpec extends SparkSuite {
     // collect must not CCE on boxed Doubles
     val dbl = emb.select(col("vec_id"),
       transform(col("embedding"), x => x.cast("double")).as("embedding"))
-    val got = SimilarityOps.ivfTopK(dbl, "vec_id", "embedding",
-      k = 1, nCentroids = 8, nProbe = 4)
-    assert(got.count() > 0)
+    assert(ivfSelfProbe(dbl, nCentroids = 8, nProbe = 4).count() > 0)
     // empty corpus: zero centroids → empty index → empty probe, no crash
     val empty = emb.filter(lit(false))
-    assert(SimilarityOps.ivfTopK(empty, "vec_id", "embedding",
-      k = 1, nCentroids = 8, nProbe = 4).count() === 0)
+    assert(ivfSelfProbe(empty, nCentroids = 8, nProbe = 4).count() === 0)
   }
 
   test("hierarchical IVF: sqrt-scale driver footprint, fine quantizer distributed, recall floor holds") {
@@ -178,8 +209,8 @@ class SimilarityOpsSpec extends SparkSuite {
   test("occupancyBits keeps the quadratic bucket-local join bounded as n grows") {
     // expected uniform occupancy n / 2^bits never exceeds the target …
     for (n <- Seq(100L, 1000L, 10000L, 1000000L, 100000000L)) {
-      val bits = SimilarityOps.occupancyBits(n, 32)
-      assert(n.toDouble / (1L << bits) <= 32.0 + 1e-9,
+      val bits = SimilarityOps.occupancyBits(n)
+      assert(n.toDouble / (1L << bits) <= SimilarityOps.TargetOccupancy + 1e-9,
         s"n=$n bits=$bits occupancy=${n.toDouble / (1L << bits)}")
     }
     // … and a 10x corpus gets ≥3 more signature bits (≥8x more buckets),

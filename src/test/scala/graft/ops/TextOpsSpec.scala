@@ -16,24 +16,6 @@ class TextOpsSpec extends SparkSuite {
     assert(got.toSeq === samples.map(refPolyHash))
   }
 
-  test("tokenCount and bpeish count behave on edge cases") {
-    val df = Seq("one two  three", " lead trail ", "", "a,b.c!d", "solo")
-      .toDF("t")
-      .select(TextOps.tokenCount(col("t")).as("wc"),
-              TextOps.bpeishTokenCount(col("t")).as("bc"))
-      .as[(Int, Int)].collect()
-    assert(df(0) === ((3, 3)))
-    assert(df(1)._1 === 2)
-    // empty string: split("") yields [""] in Spark (and in the DuckDB
-    // oracle's string_split_regex), so the whitespace token count is 1 —
-    // a documented quirk of the cheap length signal, pinned here so a
-    // well-meaning "fix" on one side doesn't silently diverge the oracle
-    assert(df(2)._1 === 1)
-    assert(df(3)._1 === 1)      // no whitespace → 1 word
-    assert(df(3)._2 === 7)      // a , b . c ! d
-    assert(df(4) === ((1, 1)))
-  }
-
   test("fingerprint: equal normalized content ⇔ equal fingerprint") {
     val df = Seq("a b c", "a  b   c", " a b c ", "a b d")
       .toDF("t").select(TextOps.fingerprint(col("t")).as("f")).as[Long].collect()
@@ -42,25 +24,21 @@ class TextOpsSpec extends SparkSuite {
   }
 
   test("wordNgrams / charNgrams produce the expected shingles") {
-    val (wg, cg) = Seq(("a b c d"))
+    val wg = Seq(("a b c d"))
       .toDF("t")
-      .select(TextOps.wordNgrams(col("t"), 2).as("w"),
-              TextOps.charNgrams(lit("abcd"), 3).as("c"))
-      .as[(Seq[String], Seq[String])].head()
+      .select(TextOps.wordNgrams(col("t"), 2).as("w"))
+      .as[Seq[String]].head()
     assert(wg === Seq("a b", "b c", "c d"))
-    assert(cg === Seq("abc", "bcd"))
   }
 
   test("shorter-than-n inputs yield one whole-text shingle, never an error") {
     // regression: sequence(1, 0) counts DOWN and slice(_, 0, n) throws
     val rows = Seq("solo", "", "two words").toDF("t")
-      .select(TextOps.wordNgrams(col("t"), 3).as("w"),
-              TextOps.charNgrams(col("t"), 8).as("c"))
-      .as[(Seq[String], Seq[String])].collect()
-    assert(rows(0)._1 === Seq("solo"))
-    assert(rows(1)._1 === Seq(""))
-    assert(rows(2)._1 === Seq("two words"))
-    assert(rows(0)._2 === Seq("solo"))
+      .select(TextOps.wordNgrams(col("t"), 3).as("w"))
+      .as[Seq[String]].collect()
+    assert(rows(0) === Seq("solo"))
+    assert(rows(1) === Seq(""))
+    assert(rows(2) === Seq("two words"))
     // and the minhash path survives single-word docs
     val sig = Seq("solo").toDF("t")
       .select(DedupOps.minhashSignature(col("t"), 2, 4)).collect()

@@ -1,10 +1,8 @@
 package graft.pipeline
 
-import graft.SparkSuite
-import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
 
-class OmsSignatureSpec extends SparkSuite {
-  import spark.implicits._
+class OmsSignatureSpec extends AnyFunSuite {
 
   test("HmacSHA256 core matches RFC 4231 test case 2") {
     // RFC 4231 TC2: key "Jefe", data "what do ya want for nothing?"
@@ -27,15 +25,5 @@ class OmsSignatureSpec extends SparkSuite {
     val other = OmsSignature.buildSignature("ws-1", key,
       "Mon, 01 Jan 2026 00:00:00 GMT", 124)
     assert(sig !== other)
-  }
-
-  test("column form signs per-row content lengths") {
-    val key = java.util.Base64.getEncoder.encodeToString("secret".getBytes)
-    val df = Seq(("Mon, 01 Jan 2026 00:00:00 GMT", 10L),
-                 ("Mon, 01 Jan 2026 00:00:00 GMT", 20L)).toDF("date", "len")
-    val got = df.select(OmsSignature.signatureCol(spark, "ws-1", key)(
-      col("date"), col("len"))).as[String].collect()
-    assert(got(0) === OmsSignature.buildSignature("ws-1", key, "Mon, 01 Jan 2026 00:00:00 GMT", 10))
-    assert(got(1) === OmsSignature.buildSignature("ws-1", key, "Mon, 01 Jan 2026 00:00:00 GMT", 20))
   }
 }

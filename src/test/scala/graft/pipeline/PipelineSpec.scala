@@ -95,6 +95,8 @@ class PipelineSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     assert(partFiles("metrics") === 1)
     // and the data is intact
     assert(spark.read.parquet(s"$out/graylog").count() === routed)
+    // a non-positive target is rejected when the config is built
+    intercept[IllegalArgumentException](Pipeline.Config(targetRowsPerFile = 0L))
   }
 
   test("token arrays survive end to end (north-rule invariant) incl. CSV round-trip") {
