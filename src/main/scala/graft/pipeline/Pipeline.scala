@@ -1,10 +1,13 @@
 package graft.pipeline
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 
 /** Per-run metric counters — mirrors RunStatistics
   * (reference: src/data_structures.rs:144-150, printed at
@@ -109,9 +112,10 @@ object Pipeline {
     * `targetRowsPerFile`). */
   private[graft] final case class Routed(cached: DataFrame, sized: DataFrame)
 
-  /** The record sinks of a batch run, each at `<outDir>/<name>`: every
-    * sink shape by default, else only the interfaces `cfg.output` enables. */
-  private def recordSinks(outDir: String, cfg: Config): Seq[Routed => Unit] = {
+  /** The record sinks of a batch run, each named and at `<outDir>/<name>`:
+    * every sink shape by default, else only the interfaces `cfg.output`
+    * enables. */
+  private def recordSinks(outDir: String, cfg: Config): Seq[(String, Routed => Unit)] = {
     def salted(r: Routed) = Route.saltedForWrite(r.cached, cfg.saltBuckets)
     def graylog(r: Routed): Unit =
       Sinks.write(Sinks.graylogShape(r.sized), s"$outDir/graylog")
@@ -121,17 +125,18 @@ object Pipeline {
       Sinks.write(Sinks.logAnalyticsShape(r.sized), s"$outDir/log_analytics", Seq("log_type"))
     cfg.output match {
       case None => Seq( // engine default: all sink shapes
-        r => Sinks.write(Sinks.fileCsvShape(salted(r)), s"$outDir/file_csv", Seq("content_type")),
-        graylog, fluentd(cfg.tenant), logAnalytics)
+        "file_csv" -> (r =>
+          Sinks.write(Sinks.fileCsvShape(salted(r)), s"$outDir/file_csv", Seq("content_type"))),
+        "graylog" -> graylog, "fluentd" -> fluentd(cfg.tenant), "log_analytics" -> logAnalytics)
       case Some(out) => // reference semantics: only enabled interfaces
-        out.file.filter(_.enabled).toSeq.map { f => (r: Routed) =>
+        out.file.filter(_.enabled).toSeq.map { f => "file_csv" -> ((r: Routed) =>
           if (f.separateByContentType)
             { CsvSink.writeSeparated(r.cached, s"$outDir/${f.path}", f.separator); () }
-          else CsvSink.writeUnified(salted(r), s"$outDir/${f.path}", f.separator)
+          else CsvSink.writeUnified(salted(r), s"$outDir/${f.path}", f.separator))
         } ++
-        out.graylog.filter(_.enabled).map(_ => graylog _) ++
-        out.fluentd.filter(_.enabled).map(f => fluentd(f.tenantName) _) ++
-        out.azureLogAnalytics.filter(_.enabled).map(_ => logAnalytics _)
+        out.graylog.filter(_.enabled).map(_ => "graylog" -> (graylog _)) ++
+        out.fluentd.filter(_.enabled).map(f => "fluentd" -> fluentd(f.tenantName) _) ++
+        out.azureLogAnalytics.filter(_.enabled).map(_ => "log_analytics" -> (logAnalytics _))
     }
   }
 
@@ -141,14 +146,75 @@ object Pipeline {
    * (src/collector.rs:161-226): dedup → parse → filter → route, materialise
    * once, fan out to `recordSinks` plus the operational outputs (prtg,
    * checksums, quarantine, metrics, each at `outputPath(name)`), then
-   * commit state. The one materialising pass observes every count the pass
-   * reports (input rows; rows parsed, routed and quarantined per emitting
-   * partition), so the `metrics` sink and the stats cost no extra job; only
-   * the state commit reads the input again.
+   * publish the state delta, which is staged beside the whole pass. The one
+   * materialising pass observes every count the pass reports (input rows;
+   * rows parsed, routed and quarantined per emitting partition), so the
+   * `metrics` sink and the stats cost no extra job; only the state staging
+   * reads the input again. Every job carries a `graft:<layer>` description:
+   * `materialize`, `sink:<name>` or `state`.
    */
   private[graft] def processBatch(spark: SparkSession, in: DataFrame, backend: StateBackend,
-                                  cfg: Config, recordSinks: Seq[Routed => Unit],
+                                  cfg: Config, recordSinks: Seq[(String, Routed => Unit)],
                                   outputPath: String => String): RunStats = {
+    val sc = spark.sparkContext
+    // Every write of the pass runs on its own thread and carries the run's
+    // tag and a `graft:` description, set on that thread (both are
+    // thread-local); the first failure cancels the running jobs by the tag.
+    val runTag = s"graft-run-${java.util.UUID.randomUUID}"
+    def write(label: String)(body: => Unit): () => Unit = () => {
+      sc.addJobTag(runTag)
+      labelled(sc, label)(body)
+    }
+    // The reference marks every RECEIVED blob known, including rows the
+    // filter later drops (src/collector.rs:161 precedes the filter at
+    // :176-184) — so stage all fresh ids, not just routed ones. Staging
+    // re-runs scan → dedup, column-pruned to doc_id, on a plan of its own:
+    // it needs nothing from the materialising pass, so it starts first and
+    // runs while the pass plans and the sinks write. Keeping the pre-filter
+    // ids in the cache instead would hold the rows the filter drops (most
+    // of a first run's input).
+    val staged = new java.util.concurrent.atomic.AtomicReference[StateBackend.Staged]()
+    val staging = Sinks.start(write("state")(staged.set(backend.stage(spark,
+      unseen(spark, in, backend, cfg).select("doc_id"), "doc_id",
+      cfg.expirationEpochSec, cfg.nowEpochSec))))
+    val (rowsIn, routedCount, quarantinedCount) =
+      try materialiseAndWrite(spark, in, backend, cfg, recordSinks, outputPath) { sinks =>
+        Sinks.fanOut(sinks.map { case (name, w) => write(s"sink:$name")(w()) } :+
+          (() => Await.result(staging, Duration.Inf)),
+          onFirstFailure = () => sc.cancelJobsWithTag(runTag))
+      } catch { case e: Throwable =>
+        sc.cancelJobsWithTag(runTag)
+        Await.ready(staging, Duration.Inf)
+        Option(staged.get).foreach(_.discard())
+        throw e
+      }
+    // Publish strictly AFTER every sink write has settled (resume
+    // contract); a failed pass above discarded the staged ids.
+    val rowsFresh = labelled(sc, "state")(staged.get.publish())
+
+    // Stats (the reference's RunStatistics, A1/A4): the committed count
+    // was observed on the state write (publish returns it), and the rest
+    // by the materialising pass.
+    RunStats(
+      rowsIn = rowsIn,
+      rowsDeduped = rowsIn - rowsFresh,
+      // dropped-by-filter includes rows of non-subscribed content types
+      // (reference: unsubscribed feeds are never fetched at all)
+      rowsDroppedByFilter = rowsFresh * cfg.duplicate - routedCount - quarantinedCount,
+      rowsQuarantined = quarantinedCount,
+      rowsRouted = routedCount)
+  }
+
+  /** The materialising pass of `processBatch`: dedup → parse → filter →
+    * route, materialised once, then `fanOut` runs every named sink write
+    * over it and returns once they have all settled, before the
+    * materialisation is released. Returns the observed input, routed and
+    * quarantined row counts. */
+  private def materialiseAndWrite(spark: SparkSession, in: DataFrame, backend: StateBackend,
+                                  cfg: Config, recordSinks: Seq[(String, Routed => Unit)],
+                                  outputPath: String => String)(
+                                  fanOut: Seq[(String, () => Unit)] => Unit): (Long, Long, Long) = {
+    val sc = spark.sparkContext
     // The input count is observed on this pass's own plan, so only the
     // materialising action fills it (a `limit`-style action on an observed
     // plan that ran first would fill it with a partial count).
@@ -191,7 +257,7 @@ object Pipeline {
     // Trade-off: a localCheckpoint truncates lineage, so a lost executor
     // fails the job instead of recomputing; the run is idempotent by the
     // overwrite contract, so a re-run is safe.
-    val filteredCached = filtered.localCheckpoint(eager = true)
+    val filteredCached = labelled(sc, "materialize")(filtered.localCheckpoint(eager = true))
     try {
       val rowsIn = inSeen.get("rows").asInstanceOf[Long]
       val parsedPerPart = observedCounts(parsedSeen, "parsed")
@@ -246,34 +312,15 @@ object Pipeline {
          stageRows("dropped_by_filter", parsedPerPart.map { case (p, n) =>
            p -> (n - filteredPerPart.getOrElse(p, 0L)) }) ++
          stageRows("quarantined", quarantinedPerPart)): _*), Schemas.metrics)
-      // operational outputs: the aggregates are a handful of rows — one
-      // file each, not one per shuffle partition
-      Sinks.fanOut(recordSinks.map(sink => () => sink(routed)) ++ Seq(
-        () => Sinks.write(Sinks.prtgShape(cached).coalesce(1), outputPath("prtg")),
-        () => Sinks.write(Sinks.routedChecksum(cached).coalesce(1), outputPath("checksums")),
-        () => Sinks.write(quarantineSized, outputPath("quarantine")),
-        () => Sinks.write(partMetrics.coalesce(1), outputPath("metrics"))))
-
-      // State commit strictly AFTER all sink writes (resume contract).
-      // The reference marks every RECEIVED blob known, including rows the
-      // filter later drops (src/collector.rs:161 precedes the filter at
-      // :176-184) — so commit all fresh ids, not just routed ones. This
-      // re-runs scan → dedup, column-pruned to doc_id: cheaper at scale
-      // than keeping the pre-filter ids cached through the fan-out.
-      val rowsFresh = backend.commit(spark, fresh.select("doc_id"), "doc_id",
-        cfg.expirationEpochSec, cfg.nowEpochSec)
-
-      // Stats (the reference's RunStatistics, A1/A4): the committed count
-      // is the snapshot's footer count (backend.commit returns it), and the
-      // rest was observed by the materialising pass.
-      RunStats(
-        rowsIn = rowsIn,
-        rowsDeduped = rowsIn - rowsFresh,
-        // dropped-by-filter includes rows of non-subscribed content types
-        // (reference: unsubscribed feeds are never fetched at all)
-        rowsDroppedByFilter = rowsFresh * cfg.duplicate - routedCount - quarantinedCount,
-        rowsQuarantined = quarantinedCount,
-        rowsRouted = routedCount)
+      fanOut(recordSinks.map { case (name, sink) => name -> (() => sink(routed)) } ++ Seq(
+        // operational outputs: the aggregates are a handful of rows — one
+        // file each, not one per shuffle partition
+        "prtg" -> (() => Sinks.write(Sinks.prtgShape(cached).coalesce(1), outputPath("prtg"))),
+        "checksums" -> (() =>
+          Sinks.write(Sinks.routedChecksum(cached).coalesce(1), outputPath("checksums"))),
+        "quarantine" -> (() => Sinks.write(quarantineSized, outputPath("quarantine"))),
+        "metrics" -> (() => Sinks.write(partMetrics.coalesce(1), outputPath("metrics")))))
+      (rowsIn, routedCount, quarantinedCount)
     } finally {
       // deterministic release (the ContextCleaner would otherwise wait for
       // GC): safe because fanOut has settled every sink job and no stat
@@ -281,6 +328,15 @@ object Pipeline {
       org.apache.spark.sql.graftglue.RddGlue.checkpointRdd(filteredCached)
         .foreach(_.unpersist(blocking = false))
     }
+  }
+
+  /** Runs `body` with this thread's Spark job description set to
+    * `graft:<label>`, so each job it launches names its pipeline layer, and
+    * restores the thread's previous description after. */
+  private[graft] def labelled[A](sc: SparkContext, label: String)(body: => A): A = {
+    val previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"graft:$label")
+    try body finally sc.setJobDescription(previous)
   }
 
   /** One observed per-partition count map, keyed by `__pid`. */

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.concurrent.{ExecutionContext, Future}
 
 /**
  * The six sink shapes (SURVEY.md §2.1 S4-S9, FIXTURES.md §5), each a pure
@@ -106,23 +107,41 @@ object Sinks {
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)
   }
 
+  /** Runs `write` on a thread of its own, so it starts at once however
+    * many other writes are running: each write blocks on its Spark jobs, and
+    * a shared pool sized to the cores would queue the later writes behind
+    * the earlier ones. The thread inherits the caller's Spark local
+    * properties. */
+  def start(write: () => Unit): Future[Unit] = Future(write())(OwnThread)
+
+  private object OwnThread extends ExecutionContext {
+    def execute(r: Runnable): Unit = new Thread(r, "graft-write").start()
+    def reportFailure(e: Throwable): Unit = ()
+  }
+
   /**
    * Runs the sink writes as CONCURRENT jobs — the reference's interfaces
    * all consume the same batch in parallel (src/collector.rs:215-226);
    * Spark's scheduler interleaves the jobs over the shared cache,
-   * overlapping I/O and compute. Returns only once EVERY write has
-   * finished, so no sink job is still reading the caller's cached blocks
-   * when it releases them. If any write failed, the first failure (in
-   * completion order) is rethrown as the original exception, with later
-   * failures attached as suppressed.
+   * overlapping I/O and compute. Every write starts at once (see `start`).
+   * The first write to fail calls `onFirstFailure` (the pipeline cancels
+   * its siblings' jobs there). Returns only once EVERY write has settled,
+   * so no sink job is still reading the caller's cached blocks when it
+   * releases them. If any write failed, the first failure (in completion
+   * order) is rethrown as the original exception, with later failures
+   * attached as suppressed.
    */
-  def fanOut(writes: Seq[() => Unit]): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
+  def fanOut(writes: Seq[() => Unit], onFirstFailure: () => Unit = () => ()): Unit = {
+    import scala.concurrent.Await
     import scala.concurrent.duration.Duration
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val settled = writes.map(w => Future(try w() catch { case e: Throwable => failures.add(e); () }))
-    Await.result(Future.sequence(settled), Duration.Inf)
+    val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val settled = writes.map(w => start(() => try w() catch { case e: Throwable =>
+      failures.add(e)
+      if (failed.compareAndSet(false, true))
+        try onFirstFailure() catch { case c: Throwable => e.addSuppressed(c) }
+    }))
+    settled.foreach(Await.ready(_, Duration.Inf))
     Option(failures.poll()).foreach { first =>
       failures.forEach(first.addSuppressed(_))
       throw first

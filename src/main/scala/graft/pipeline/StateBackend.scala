@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -41,11 +41,22 @@ trait StateBackend {
     * [[Schemas.knownContent]] schema. */
   def load(spark: SparkSession, nowEpochSec: Long): DataFrame
 
-  /** Durably commit the batch's ids. Returns the number of rows committed,
-    * computed from storage metadata — callers use it for run stats without
-    * re-evaluating the (possibly expensive) `ids` lineage. */
+  /** First half of a commit: write the batch's ids where no `load` reads
+    * them yet. The pipeline runs it alongside the sink writes and calls
+    * [[StateBackend.Staged.publish]] only after every sink write has
+    * settled, so the ids become visible strictly after the outputs that
+    * carry them (the resume contract), or `discard` when a sink write
+    * failed. A run that dies before `publish` leaves state as it was. */
+  def stage(spark: SparkSession, ids: DataFrame, idCol: String,
+            expirationEpochSec: Long, commitEpochSec: Long): StateBackend.Staged
+
+  /** Durably commit the batch's ids: `stage(...).publish()`. Returns the
+    * number of rows committed, observed on the write itself — callers use
+    * it for run stats without re-evaluating the (possibly expensive) `ids`
+    * lineage. */
   def commit(spark: SparkSession, ids: DataFrame, idCol: String,
-             expirationEpochSec: Long, commitEpochSec: Long): Long
+             expirationEpochSec: Long, commitEpochSec: Long): Long =
+    stage(spark, ids, idCol, expirationEpochSec, commitEpochSec).publish()
 
   /** Raw committed state row count (no expiry filter — an upper bound on
     * any loaded view), counted from storage metadata by one count job per
@@ -56,15 +67,29 @@ trait StateBackend {
   def currentVersion: Option[Int] = None
 }
 
-/** The default backend: snapshot-delta parquet + atomic pointer. */
+object StateBackend {
+  /** A batch's ids, written but not yet visible to `load`. */
+  trait Staged {
+    /** Makes the ids visible; returns the number of rows committed. */
+    def publish(): Long
+    /** Drops the staged ids of a batch that failed before `publish`. */
+    def discard(): Unit
+  }
+}
+
+/** The default backend: snapshot-delta parquet + atomic pointer. `stage`
+  * writes `snapshot-(N+1)`, which `load` never reads while the pointer is
+  * at N; `publish` is the pointer swap alone. */
 final class SnapshotStateBackend(val store: StateStore) extends StateBackend {
   def load(spark: SparkSession, nowEpochSec: Long): DataFrame =
     store.load(spark, nowEpochSec)
-  def commit(spark: SparkSession, ids: DataFrame, idCol: String,
-             expirationEpochSec: Long, commitEpochSec: Long): Long = {
-    val snap = store.commit(spark, ids, idCol, expirationEpochSec, commitEpochSec)
-    // parquet-footer metadata count of exactly the delta just written
-    spark.read.parquet(store.snapshotPath(snap)).count()
+  def stage(spark: SparkSession, ids: DataFrame, idCol: String,
+            expirationEpochSec: Long, commitEpochSec: Long): StateBackend.Staged = {
+    val (snap, rows) = store.stage(spark, ids, idCol, expirationEpochSec, commitEpochSec)
+    new StateBackend.Staged {
+      def publish(): Long = { store.publish(snap); rows }
+      def discard(): Unit = store.discard(snap)
+    }
   }
   def sizeHint(spark: SparkSession): Long = store.liveRowCount(spark)
   override def currentVersion: Option[Int] = store.currentSnapshot
@@ -77,6 +102,9 @@ final class SnapshotStateBackend(val store: StateStore) extends StateBackend {
  * increasing `snapshot_id` (derived from the table's current max, read once
  * per backend instance — the catalog analog of the pointer read); reads are
  * expiry-filtered scans.
+ * The append is itself the commit: a table format makes appended rows
+ * visible at once, so `stage` writes nothing and `publish` does the whole
+ * append. This backend gets no overlap with the sink writes.
  * Last-writer-wins resolution and compaction belong to the table format
  * (Iceberg MERGE / rewrite_data_files) — this engine's read-side contract
  * stays identical to [[StateStore.load]].
@@ -116,14 +144,21 @@ final class CatalogStateBackend(
     if (!exists(spark)) StateStore.empty(spark)
     else StateStore.unexpired(spark.table(table), nowEpochSec)
 
-  def commit(spark: SparkSession, ids: DataFrame, idCol: String,
-             expirationEpochSec: Long, commitEpochSec: Long): Long = {
+  def stage(spark: SparkSession, ids: DataFrame, idCol: String,
+            expirationEpochSec: Long, commitEpochSec: Long): StateBackend.Staged =
+    new StateBackend.Staged {
+      def publish(): Long = append(spark, ids, idCol, expirationEpochSec, commitEpochSec)
+      def discard(): Unit = ()
+    }
+
+  private def append(spark: SparkSession, ids: DataFrame, idCol: String,
+                     expirationEpochSec: Long, commitEpochSec: Long): Long = {
     val next = version(spark) + 1
+    val written = new Observation()
     val rows = StateStore.rows(ids, idCol, expirationEpochSec, commitEpochSec, next)
+      .observe(written, count(lit(1)).as("rows"))
     // The table is PARTITIONED on snapshot_id — each commit is one new
-    // partition directory (the catalog analog of a snapshot delta dir), so
-    // the committed-count below prunes to the just-written partition's
-    // footers: O(batch), not O(state).
+    // partition directory (the catalog analog of a snapshot delta dir).
     // Lakehouse formats register V2 tables → the V2 writer. The parquet
     // fallback lands in the session catalog as a V1 table, where Spark
     // rejects V2 appends (writeIntoV1TableNotAllowedError) — the V1
@@ -136,7 +171,7 @@ final class CatalogStateBackend(
     else rows.writeTo(table).using(format)
       .partitionedBy(col("snapshot_id")).create()
     lastVersion = next
-    spark.table(table).filter(col("snapshot_id") === next).count()
+    written.get("rows").asInstanceOf[Long]
   }
 
   /** Raw table row count — metadata-cheap for parquet/Iceberg tables. */

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
@@ -21,13 +21,19 @@ import java.nio.charset.StandardCharsets
  * when the chain grows long. On a production cluster this class is the one
  * seam to replace with `spark.read/writeTo("cat.db.known_content")`.
  *
- * Resume contract (north rule; SURVEY.md §7.3): state is committed strictly
- * AFTER the durable sink write of the same batch. A job killed between sink
- * write and state commit re-writes that batch on resume into overwritten
- * output paths (idempotent), never skips data, and the anti-join absorbs all
- * previously committed rows — resume-without-re-emission of *committed* rows.
- * (The reference is weaker: it saves state only at run end and records blobs
- * as known even when parsing failed, src/collector.rs:161-171.)
+ * Resume contract (north rule; SURVEY.md §7.3): a batch's ids become
+ * visible strictly AFTER every durable sink write of the same batch. The
+ * commit is two steps, like an Iceberg fast append: `stage` writes the
+ * delta `snapshot-(N+1)` (it may run alongside the sink writes, because no
+ * `load` reads past the pointer), and `publish` swaps the pointer once every
+ * sink write has settled; a run whose sink write fails discards the delta.
+ * A job killed before the swap leaves an orphan delta that is never read
+ * and that the next commit overwrites; on resume
+ * that batch is re-written into overwritten output paths (idempotent),
+ * never skipped, and the anti-join absorbs all previously committed rows —
+ * resume-without-re-emission of *committed* rows. (The reference is weaker:
+ * it saves state only at run end and records blobs as known even when
+ * parsing failed, src/collector.rs:161-171.)
  */
 class StateStore(val dir: String) {
   private val currentPtr = Paths.get(dir, "_CURRENT")
@@ -61,28 +67,53 @@ class StateStore(val dir: String) {
   def load(spark: SparkSession, nowEpochSec: Long): DataFrame = {
     val paths = livePaths
     if (paths.isEmpty) StateStore.empty(spark)
-    else StateStore.unexpired(spark.read.parquet(paths: _*), nowEpochSec)
+    else StateStore.unexpired(read(spark, paths), nowEpochSec)
   }
 
   /** Raw live state row count (no expiry filter — an upper bound on any
     * loaded view): one parquet-footer count over the live deltas. */
   def liveRowCount(spark: SparkSession): Long = {
     val paths = livePaths
-    if (paths.isEmpty) 0L else spark.read.parquet(paths: _*).count()
+    if (paths.isEmpty) 0L else read(spark, paths).count()
   }
 
+  /** The deltas at `paths`, read with the one state schema: every delta is
+    * written from [[StateStore.rows]], so inferring it from a footer would
+    * only cost a job per read. */
+  private def read(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.schema(Schemas.knownContent).parquet(paths: _*)
+
   /**
-   * Commit: write `newlyRouted` ids as delta snapshot N+1, atomically swap
-   * the pointer. Per-partition lineage is recorded on every row (see
-   * [[StateStore.rows]]). Crash before the pointer swap leaves an orphan
-   * directory that is never referenced — commits are all-or-nothing.
+   * Stage: write `ids` as delta snapshot N+1 but leave the pointer at N,
+   * so no `load` reads it until `publish(N + 1)`. Per-partition lineage is
+   * recorded on every row (see [[StateStore.rows]]). Returns N+1 and the
+   * rows written, observed on the write itself. A failed or cancelled
+   * write deletes what it wrote. A crash before `publish` leaves an orphan
+   * directory that is never referenced and that the next stage overwrites —
+   * commits are all-or-nothing.
    */
-  def commit(spark: SparkSession, newlyRouted: DataFrame, idCol: String,
-             expirationEpochSec: Long, commitEpochSec: Long): Int = {
+  def stage(spark: SparkSession, ids: DataFrame, idCol: String,
+            expirationEpochSec: Long, commitEpochSec: Long): (Int, Long) = {
     val next = currentSnapshot.getOrElse(-1) + 1
-    StateStore.rows(newlyRouted, idCol, expirationEpochSec, commitEpochSec, next)
+    val written = new Observation()
+    try StateStore.rows(ids, idCol, expirationEpochSec, commitEpochSec, next)
+      .observe(written, count(lit(1)).as("rows"))
       .write.mode("overwrite").parquet(snapshotPath(next))
-    swapPointer(next)
+    catch { case e: Throwable => discard(next); throw e }
+    (next, written.get("rows").asInstanceOf[Long])
+  }
+
+  /** Publish: make staged snapshot `n` live by the atomic pointer swap. */
+  def publish(n: Int): Unit = swapPointer(n)
+
+  /** Delete staged snapshot `n`, which was never published. */
+  def discard(n: Int): Unit = deleteTree(snapshotPath(n))
+
+  /** Commit: `stage` then `publish`. Returns the new snapshot id. */
+  def commit(spark: SparkSession, ids: DataFrame, idCol: String,
+             expirationEpochSec: Long, commitEpochSec: Long): Int = {
+    val (next, _) = stage(spark, ids, idCol, expirationEpochSec, commitEpochSec)
+    publish(next)
     next
   }
 
@@ -95,18 +126,18 @@ class StateStore(val dir: String) {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("content_id")
       .orderBy(col("snapshot_id").desc, col("committed_at").desc)
-    val merged = spark.read.parquet(livePaths: _*)
+    val merged = read(spark, livePaths)
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
     merged.write.mode("overwrite").parquet(snapshotPath(n + 1))
     swapPointer(n + 1)
-    (0 to n).foreach { i =>
-      val p = Paths.get(snapshotPath(i))
-      if (Files.exists(p)) {
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => Files.deleteIfExists(f))
-      }
-    }
+    (0 to n).foreach(i => deleteTree(snapshotPath(i)))
+  }
+
+  private def deleteTree(path: String): Unit = {
+    val p = Paths.get(path)
+    if (Files.exists(p))
+      Files.walk(p).sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.deleteIfExists(f))
   }
 
   private def swapPointer(next: Int): Unit = {

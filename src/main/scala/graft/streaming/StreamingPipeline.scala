@@ -18,10 +18,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
  *    table read / Kafka topic).
  *  - `foreachBatch` runs the SAME batch core per micro-batch
  *    (`Pipeline.processBatch`): anti-join dedup vs the state backend, parse,
- *    filter, route, one materialisation, the sink fan-out, then the state
- *    commit — so batch and streaming share one code path and one
- *    exactly-once contract (state committed after every sink write;
- *    re-delivery absorbed by the anti-join, ST4). Micro-batch N writes
+ *    filter, route, one materialisation, the sink fan-out with the state
+ *    staged beside it, then the state publish — so batch and streaming
+ *    share one code path and one exactly-once contract (state visible only
+ *    after every sink write; re-delivery absorbed by the anti-join, ST4). Micro-batch N writes
  *    `routed/batch_id=N` (plus the optional `transport`),
  *    `prtg_batches/batch_id=N`, and `quarantine/`, `checksums/` and
  *    `metrics/` each under `batch_id=N`.
@@ -63,7 +63,10 @@ object StreamingPipeline {
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // Exactly-once across EVERY crash window. The commit order is
-        //   sink writes → state commit → batch marker → (engine) offsets.
+        //   sink writes ‖ state stage → state publish → batch marker
+        //   → (engine) offsets
+        // (‖: the staged delta is written alongside the sinks but stays
+        // invisible until the publish after they all settle).
         // Replays are disambiguated without trusting the dedup state:
         //  - marker present: this batch fully committed before the crash
         //    (offset commit was lost) → skip everything;
@@ -79,10 +82,12 @@ object StreamingPipeline {
         val batchDir = s"$outDir/routed/batch_id=$batchId"
         if (!Files.exists(marker)) {
           val replayAfterStateCommit = Files.exists(Paths.get(batchDir)) &&
-            Pipeline.unseen(spark, batch, backend, cfg).isEmpty
+            Pipeline.labelled(spark.sparkContext, "replay-guard") {
+              Pipeline.unseen(spark, batch, backend, cfg).isEmpty
+            }
           if (!replayAfterStateCommit) {
-            val recordSinks = ((r: Pipeline.Routed) => Sinks.write(r.cached, batchDir)) +:
-              transport.toSeq.map(send => (r: Pipeline.Routed) => { send(r.cached); () })
+            val recordSinks = ("routed" -> ((r: Pipeline.Routed) => Sinks.write(r.cached, batchDir))) +:
+              transport.toSeq.map(send => "transport" -> ((r: Pipeline.Routed) => { send(r.cached); () }))
             routedTotal.addAndGet(Pipeline.processBatch(spark, batch, backend, cfg, recordSinks, {
               case "prtg" => s"$outDir/prtg_batches/batch_id=$batchId"
               case name => s"$outDir/$name/batch_id=$batchId"
