@@ -189,12 +189,9 @@ case class SimHashPolyExpr(child: Expression, bits: Int)
 }
 
 case class LshSignatureExpr(child: Expression, bits: Int, offset: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with VectorInputCheck {
   override def dataType: DataType = LongType
-  private def isFloatArray: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
+  protected def vectorChild: Expression = child
   override def nullSafeEval(v: Any): Any =
     Hashing.lshSignature(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
       isFloatArray, bits, offset)
@@ -208,20 +205,9 @@ case class LshSignatureExpr(child: Expression, bits: Int, offset: Int)
 /** Symmetric int8 quantization q_i = floor(x_i·127/max|x|) — see
   * Hashing.quantizeI8. */
 case class QuantizeI8Expr(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with VectorInputCheck {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  private def isFloatArray: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"expects array<float> or array<double>, got ${other.simpleString}")
-  }
+  protected def vectorChild: Expression = child
   override def nullSafeEval(v: Any): Any =
     Hashing.quantizeI8(
       v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], isFloatArray)
@@ -239,21 +225,10 @@ case class QuantizeI8Expr(child: Expression)
   * Centroids ride the codegen references, not the plan tree. */
 case class NearestCentroidsExpr(child: Expression, centsFlat: Array[Float],
                                 dim: Int, cids: Array[Long], n: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with VectorInputCheck {
   require(dim > 0 && n > 0 && centsFlat.length == cids.length * dim)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  private def isFloatArray: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"expects array<float> or array<double>, got ${other.simpleString}")
-  }
+  protected def vectorChild: Expression = child
   override def nullSafeEval(v: Any): Any =
     Hashing.nearestCentroids(
       v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
@@ -290,7 +265,7 @@ case class BpeEncodeExpr(child: Expression, mergesSpec: String)
     copy(child = c)
 }
 
-/** Shared float/double array-input type check for the PQ expressions. */
+/** Shared float/double array-input type check for the vector expressions. */
 trait VectorInputCheck { self: Expression =>
   protected def vectorChild: Expression
   protected def isFloatArray: Boolean = vectorChild.dataType match {

@@ -6,8 +6,6 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
-import scala.concurrent.Await
-import scala.concurrent.duration.Duration
 
 /** Per-run metric counters — mirrors RunStatistics
   * (reference: src/data_structures.rs:144-150, printed at
@@ -33,7 +31,6 @@ object Pipeline {
   case class Config(
     rules: Seq[RoutingRule] = DataGen.routingRules,
     saltBuckets: Int = 8,
-    tenant: String = "MyTenant",
     skipKnownLogs: Boolean = true,
     enabledTypes: Seq[String] = Schemas.ContentTypes,
     duplicate: Int = 1,
@@ -59,6 +56,8 @@ object Pipeline {
     // commit ordering and run stats are identical across backends.
     stateBackend: Option[StateBackend] = None) {
     require(targetRowsPerFile > 0, s"targetRowsPerFile must be > 0, got $targetRowsPerFile")
+    /** The Fluentd tag: the configured tenant name, else the reference's. */
+    def tenant: String = output.flatMap(_.fluentd).fold(FluentdOutputConfig().tenantName)(_.tenantName)
   }
 
   case class Result(stats: RunStats, snapshot: Option[Int])
@@ -119,15 +118,15 @@ object Pipeline {
     def salted(r: Routed) = Route.saltedForWrite(r.cached, cfg.saltBuckets)
     def graylog(r: Routed): Unit =
       Sinks.write(Sinks.graylogShape(r.sized), s"$outDir/graylog")
-    def fluentd(tenant: String)(r: Routed): Unit =
-      Sinks.write(Sinks.fluentdShape(r.sized, tenant), s"$outDir/fluentd")
+    def fluentd(r: Routed): Unit =
+      Sinks.write(Sinks.fluentdShape(r.sized, cfg.tenant), s"$outDir/fluentd")
     def logAnalytics(r: Routed): Unit =
       Sinks.write(Sinks.logAnalyticsShape(r.sized), s"$outDir/log_analytics", Seq("log_type"))
     cfg.output match {
       case None => Seq( // engine default: all sink shapes
         "file_csv" -> (r =>
           Sinks.write(Sinks.fileCsvShape(salted(r)), s"$outDir/file_csv", Seq("content_type"))),
-        "graylog" -> graylog, "fluentd" -> fluentd(cfg.tenant), "log_analytics" -> logAnalytics)
+        "graylog" -> graylog, "fluentd" -> fluentd, "log_analytics" -> logAnalytics)
       case Some(out) => // reference semantics: only enabled interfaces
         out.file.filter(_.enabled).toSeq.map { f => "file_csv" -> ((r: Routed) =>
           if (f.separateByContentType)
@@ -135,7 +134,7 @@ object Pipeline {
           else CsvSink.writeUnified(salted(r), s"$outDir/${f.path}", f.separator))
         } ++
         out.graylog.filter(_.enabled).map(_ => "graylog" -> (graylog _)) ++
-        out.fluentd.filter(_.enabled).map(f => "fluentd" -> fluentd(f.tenantName) _) ++
+        out.fluentd.filter(_.enabled).map(_ => "fluentd" -> (fluentd _)) ++
         out.azureLogAnalytics.filter(_.enabled).map(_ => "log_analytics" -> (logAnalytics _))
     }
   }
@@ -157,39 +156,29 @@ object Pipeline {
                                   cfg: Config, recordSinks: Seq[(String, Routed => Unit)],
                                   outputPath: String => String): RunStats = {
     val sc = spark.sparkContext
-    // Every write of the pass runs on its own thread and carries the run's
-    // tag and a `graft:` description, set on that thread (both are
-    // thread-local); the first failure cancels the running jobs by the tag.
-    val runTag = s"graft-run-${java.util.UUID.randomUUID}"
-    def write(label: String)(body: => Unit): () => Unit = () => {
-      sc.addJobTag(runTag)
-      labelled(sc, label)(body)
-    }
+    val fanOut = new Sinks.FanOut(sc)
     // The reference marks every RECEIVED blob known, including rows the
     // filter later drops (src/collector.rs:161 precedes the filter at
     // :176-184) — so stage all fresh ids, not just routed ones. Staging
-    // re-runs scan → dedup, column-pruned to doc_id, on a plan of its own:
-    // it needs nothing from the materialising pass, so it starts first and
-    // runs while the pass plans and the sinks write. Keeping the pre-filter
-    // ids in the cache instead would hold the rows the filter drops (most
-    // of a first run's input).
+    // re-runs scan → dedup, pruned to doc_id, on a plan of its own, so it
+    // starts first and runs while the pass plans and the sinks write;
+    // caching the pre-filter ids instead would hold the rows the filter
+    // drops (most of a first run's input).
     val staged = new java.util.concurrent.atomic.AtomicReference[StateBackend.Staged]()
-    val staging = Sinks.start(write("state")(staged.set(backend.stage(spark,
+    fanOut.start("state")(staged.set(backend.stage(spark,
       unseen(spark, in, backend, cfg).select("doc_id"), "doc_id",
-      cfg.expirationEpochSec, cfg.nowEpochSec))))
+      cfg.expirationEpochSec, cfg.nowEpochSec)))
     val (rowsIn, routedCount, quarantinedCount) =
-      try materialiseAndWrite(spark, in, backend, cfg, recordSinks, outputPath) { sinks =>
-        Sinks.fanOut(sinks.map { case (name, w) => write(s"sink:$name")(w()) } :+
-          (() => Await.result(staging, Duration.Inf)),
-          onFirstFailure = () => sc.cancelJobsWithTag(runTag))
-      } catch { case e: Throwable =>
-        sc.cancelJobsWithTag(runTag)
-        Await.ready(staging, Duration.Inf)
-        Option(staged.get).foreach(_.discard())
+      try materialiseAndWrite(spark, in, backend, cfg, recordSinks, outputPath, fanOut)
+      catch { case e: Throwable =>
+        // a failure before the fan-out settled cancels the staging; one
+        // that `settle` rethrew is rethrown alone
+        fanOut.fail(e)
+        try fanOut.settle() finally Option(staged.get).foreach(_.discard())
         throw e
       }
-    // Publish strictly AFTER every sink write has settled (resume
-    // contract); a failed pass above discarded the staged ids.
+    // Publish strictly AFTER every write has settled (resume contract); a
+    // failed pass above discarded the staged ids.
     val rowsFresh = labelled(sc, "state")(staged.get.publish())
 
     // Stats (the reference's RunStatistics, A1/A4): the committed count
@@ -206,15 +195,13 @@ object Pipeline {
   }
 
   /** The materialising pass of `processBatch`: dedup → parse → filter →
-    * route, materialised once, then `fanOut` runs every named sink write
-    * over it and returns once they have all settled, before the
-    * materialisation is released. Returns the observed input, routed and
-    * quarantined row counts. */
+    * route, materialised once; every named sink write starts on `fanOut`,
+    * which settles them all before the materialisation is released.
+    * Returns the observed input, routed and quarantined row counts. */
   private def materialiseAndWrite(spark: SparkSession, in: DataFrame, backend: StateBackend,
                                   cfg: Config, recordSinks: Seq[(String, Routed => Unit)],
-                                  outputPath: String => String)(
-                                  fanOut: Seq[(String, () => Unit)] => Unit): (Long, Long, Long) = {
-    val sc = spark.sparkContext
+                                  outputPath: String => String,
+                                  fanOut: Sinks.FanOut): (Long, Long, Long) = {
     // The input count is observed on this pass's own plan, so only the
     // materialising action fills it (a `limit`-style action on an observed
     // plan that ran first would fill it with a partial count).
@@ -257,7 +244,8 @@ object Pipeline {
     // Trade-off: a localCheckpoint truncates lineage, so a lost executor
     // fails the job instead of recomputing; the run is idempotent by the
     // overwrite contract, so a re-run is safe.
-    val filteredCached = labelled(sc, "materialize")(filtered.localCheckpoint(eager = true))
+    val filteredCached =
+      labelled(spark.sparkContext, "materialize")(filtered.localCheckpoint(eager = true))
     try {
       val rowsIn = inSeen.get("rows").asInstanceOf[Long]
       val parsedPerPart = observedCounts(parsedSeen, "parsed")
@@ -312,19 +300,21 @@ object Pipeline {
          stageRows("dropped_by_filter", parsedPerPart.map { case (p, n) =>
            p -> (n - filteredPerPart.getOrElse(p, 0L)) }) ++
          stageRows("quarantined", quarantinedPerPart)): _*), Schemas.metrics)
-      fanOut(recordSinks.map { case (name, sink) => name -> (() => sink(routed)) } ++ Seq(
-        // operational outputs: the aggregates are a handful of rows — one
-        // file each, not one per shuffle partition
-        "prtg" -> (() => Sinks.write(Sinks.prtgShape(cached).coalesce(1), outputPath("prtg"))),
-        "checksums" -> (() =>
-          Sinks.write(Sinks.routedChecksum(cached).coalesce(1), outputPath("checksums"))),
-        "quarantine" -> (() => Sinks.write(quarantineSized, outputPath("quarantine"))),
-        "metrics" -> (() => Sinks.write(partMetrics.coalesce(1), outputPath("metrics")))))
+      recordSinks.foreach { case (name, sink) => fanOut.start(s"sink:$name")(sink(routed)) }
+      def output(name: String)(df: => DataFrame): Unit =
+        fanOut.start(s"sink:$name")(Sinks.write(df, outputPath(name)))
+      // operational outputs: the aggregates are a handful of rows — one
+      // file each, not one per shuffle partition
+      output("prtg")(Sinks.prtgShape(cached).coalesce(1))
+      output("checksums")(Sinks.routedChecksum(cached).coalesce(1))
+      output("quarantine")(quarantineSized)
+      output("metrics")(partMetrics.coalesce(1))
+      fanOut.settle()
       (rowsIn, routedCount, quarantinedCount)
     } finally {
       // deterministic release (the ContextCleaner would otherwise wait for
-      // GC): safe because fanOut has settled every sink job and no stat
-      // reads the blocks
+      // GC): safe only once the fan-out has settled every job that reads
+      // the blocks
       org.apache.spark.sql.graftglue.RddGlue.checkpointRdd(filteredCached)
         .foreach(_.unpersist(blocking = false))
     }

@@ -93,7 +93,6 @@ object CollectorConfig {
       skipKnownLogs = c.collect.skipKnownLogs,
       enabledTypes = c.collect.contentTypes,
       duplicate = c.collect.duplicate,
-      tenant = c.output.fluentd.map(_.tenantName).getOrElse("MyTenant"),
       output = Some(c.output))
 }
 

@@ -1,15 +1,16 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import scala.concurrent.{ExecutionContext, Future}
 
 /**
  * The six sink shapes (SURVEY.md §2.1 S4-S9, FIXTURES.md §5), each a pure
  * DataFrame → DataFrame transform plus a partitioned Parquet writer. In the
  * reference every sink re-encodes the same routed batch (src/collector.rs:
- * 215-226); here each transform reuses one persisted routed DataFrame and the
- * fan-out is N cheap write actions.
+ * 215-226); here each transform reads one routed DataFrame, materialised
+ * once by a `localCheckpoint`, and the `FanOut` is N cheap write actions.
  *
  * The byte-level transports (TCP socket per record, HMAC-signed POST) are
  * out of scope for a table-to-table engine; what is preserved exactly is the
@@ -107,44 +108,51 @@ object Sinks {
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)
   }
 
-  /** Runs `write` on a thread of its own, so it starts at once however
-    * many other writes are running: each write blocks on its Spark jobs, and
-    * a shared pool sized to the cores would queue the later writes behind
-    * the earlier ones. The thread inherits the caller's Spark local
-    * properties. */
-  def start(write: () => Unit): Future[Unit] = Future(write())(OwnThread)
-
-  private object OwnThread extends ExecutionContext {
-    def execute(r: Runnable): Unit = new Thread(r, "graft-write").start()
-    def reportFailure(e: Throwable): Unit = ()
-  }
-
   /**
-   * Runs the sink writes as CONCURRENT jobs — the reference's interfaces
-   * all consume the same batch in parallel (src/collector.rs:215-226);
-   * Spark's scheduler interleaves the jobs over the shared cache,
-   * overlapping I/O and compute. Every write starts at once (see `start`).
-   * The first write to fail calls `onFirstFailure` (the pipeline cancels
-   * its siblings' jobs there). Returns only once EVERY write has settled,
-   * so no sink job is still reading the caller's cached blocks when it
-   * releases them. If any write failed, the first failure (in completion
-   * order) is rethrown as the original exception, with later failures
-   * attached as suppressed.
+   * The writes of one collection pass, run as CONCURRENT jobs — the
+   * reference's interfaces all consume the same batch in parallel
+   * (src/collector.rs:215-226); Spark's scheduler interleaves the jobs over
+   * the shared cache. Every job a write launches carries the pass's run tag.
    */
-  def fanOut(writes: Seq[() => Unit], onFirstFailure: () => Unit = () => ()): Unit = {
-    import scala.concurrent.Await
-    import scala.concurrent.duration.Duration
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val settled = writes.map(w => start(() => try w() catch { case e: Throwable =>
-      failures.add(e)
-      if (failed.compareAndSet(false, true))
-        try onFirstFailure() catch { case c: Throwable => e.addSuppressed(c) }
-    }))
-    settled.foreach(Await.ready(_, Duration.Inf))
-    Option(failures.poll()).foreach { first =>
-      failures.forEach(first.addSuppressed(_))
-      throw first
+  final class FanOut(sc: SparkContext) {
+    private val tag = s"graft-run-${java.util.UUID.randomUUID}"
+    private val threads = new ConcurrentLinkedQueue[Thread]()
+    private val failures = new ConcurrentLinkedQueue[Throwable]()
+
+    /** Runs `write` on a thread of its own, so it starts at once however
+      * many other writes are running (a pool sized to the cores would queue
+      * the later ones). The thread inherits the caller's Spark local
+      * properties and sets the run tag and the `graft:<label>` job
+      * description, both thread-local. A failure goes to `fail`. */
+    def start(label: String)(write: => Unit): Unit = {
+      val t = new Thread(() => {
+        sc.addJobTag(tag)
+        try Pipeline.labelled(sc, label)(write) catch { case e: Throwable => fail(e) }
+      }, s"graft-$label")
+      threads.add(t)
+      t.start()
+    }
+
+    /** Records a failure of the pass and cancels the pass's jobs. */
+    def fail(e: Throwable): Unit = { failures.add(e); sc.cancelJobsWithTag(tag) }
+
+    /** Returns once EVERY started write has ended, so no job still reads
+      * the caller's cached blocks when it releases them. After a failure it
+      * re-issues the cancel while a write is alive (`cancelJobsWithTag`
+      * misses a job submitted later). Rethrows the first failure as the
+      * original exception, later ones attached as suppressed, and forgets
+      * them: a failure recorded again after that is rethrown alone. */
+    def settle(): Unit = {
+      threads.forEach { t =>
+        while (t.isAlive) {
+          t.join(100)
+          if (!failures.isEmpty) sc.cancelJobsWithTag(tag)
+        }
+      }
+      Option(failures.poll()).foreach { first =>
+        Iterator.continually(failures.poll()).takeWhile(_ != null).foreach(first.addSuppressed)
+        throw first
+      }
     }
   }
 }

@@ -207,6 +207,12 @@ class FunctionsSpec extends SparkSuite {
     intercept[org.apache.spark.sql.AnalysisException] {
       df.select(quantize_i8(col("v"))).collect()
     }
+    // the other vector kernels share the check: neither reads a string or
+    // an int array as doubles
+    val kernels = Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column](
+      lsh_signature(_, 16), nearest_centroids(_, Seq(1L -> Array(1f, 0f)), 1))
+    for (v <- Seq(df, Seq(Seq(1, 2)).toDF("v")); f <- kernels)
+      intercept[org.apache.spark.sql.AnalysisException](v.select(f(col("v"))).collect())
   }
 
   test("doc_id_num ≡ substring(doc_id, 5, 12).cast(long) on generated ids") {

@@ -4,6 +4,7 @@ import graft.SparkSuite
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.TaskContext
+import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.scheduler.{JobResult, JobSucceeded, SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart}
 import scala.jdk.CollectionConverters._
@@ -97,6 +98,57 @@ class FanOutJobsSpec extends SparkSuite {
     assert(backend.currentVersion.isEmpty, "state published after a failed sink")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(store.snapshotPath(0))),
       "the failed run left its staged delta behind")
+  }
+
+  test("a job a write submits after the first failure is cancelled too") {
+    val out = tmpDir("late")
+    val backend = new SnapshotStateBackend(new StateStore(s"$out/state"))
+    val boom = new IllegalStateException("sink failed")
+    val t0 = System.nanoTime()
+    val (res, jobs) = jobsOf(Pipeline.processBatch(spark, DataGen.sequences(spark, 500L, 2),
+      backend, cfg, Seq(
+        "boom" -> (_ => throw boom),
+        // submitted after the failure's cancel; 30 s per task unless killed
+        "late" -> (r => { Thread.sleep(500); r.cached.rdd.foreachPartition { _ =>
+          val tc = TaskContext.get()
+          var i = 0
+          while (i < 600 && !tc.isInterrupted()) { Thread.sleep(50); i += 1 }
+        }})),
+      name => s"$out/$name"))
+    val seconds = (System.nanoTime() - t0) / 1e9
+
+    assert(res.left.toOption.exists(_ eq boom), s"not the failing sink's own error: $res")
+    assert(seconds < 20, s"the late job ran to its end: $seconds s")
+    val late = jobs.filter(_.description.contains("graft:sink:late"))
+    assert(late.nonEmpty && late.forall(_.result.exists(_ != JobSucceeded)), s"late sink's jobs: $late")
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty, "a job is still running")
+    assert(backend.currentVersion.isEmpty, "state published after a failed sink")
+  }
+
+  test("a failing materialising pass rethrows its own error and leaves no state or job behind") {
+    val out = tmpDir("poison")
+    val store = new StateStore(s"$out/state")
+    val poisoned = "doc-000000000007"
+    // on `tokens`, which the staging prunes: the staging succeeds and the
+    // checkpoint fails (after a pause, so the staging has settled first)
+    val poison = udf { (id: String, tokens: Seq[Int]) =>
+      if (id == poisoned) { Thread.sleep(2000); throw new IllegalStateException(s"poisoned $id") }
+      tokens
+    }
+    val in = DataGen.sequences(spark, 500L, 2)
+      .withColumn("tokens", poison(col("doc_id"), col("tokens")))
+    val (res, jobs) = jobsOf(Pipeline.processBatch(spark, in,
+      new SnapshotStateBackend(store), cfg, Nil, name => s"$out/$name"))
+
+    val err = res.left.toOption.getOrElse(fail(s"the pass did not fail: $res"))
+    val causes = Iterator.iterate(err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
+      c.getMessage == s"poisoned $poisoned"), s"not the UDF's own error: $err")
+    assert(jobs.forall(_.result.isDefined), s"a job did not end: $jobs")
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty, "a job is still running")
+    assert(store.currentSnapshot.isEmpty, "_CURRENT set after a failed pass")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(store.snapshotPath(0))),
+      "the failed pass left its staged delta behind")
   }
 }
 
